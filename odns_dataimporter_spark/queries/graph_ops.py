@@ -647,9 +647,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
         .distinct()
     )
-    # materialize the edge list once (localCheckpoint, lazy — plan
-    # construction stays action-free): without it every round's join
-    # re-derives the pair expansion through lineage
+    # materialize the edge list once (localCheckpoint): without it every
+    # round's join re-derives the pair expansion through lineage. Under
+    # AQE eager=False still runs the shuffle stages below the checkpoint
+    # while the DataFrame is built (ARCHITECTURE.md, plan-reuse item 2)
     bi = (
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
@@ -781,9 +782,10 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = stacked.groupBy(F.col("a").alias("x")).agg(
         F.count("*").cast("long").alias("d")
     )
-    # deterministic top-N hubs; 20 rows, checkpointed lazily so the
-    # two consumers (neighborhood join + output) don't re-run the
-    # degree aggregate each.
+    # deterministic top-N hubs; 20 rows, checkpointed so the two
+    # consumers (neighborhood join + output) don't re-run the degree
+    # aggregate each. Under AQE the degree aggregate's jobs run here,
+    # while the DataFrame is built, not at the write.
     hubs = (
         deg.orderBy(F.desc("d"), F.asc("x"))
         .limit(_CC_TOPN)

@@ -13,6 +13,13 @@ logical plans survive a multi-executor cluster at 100 TB:
 - ``nanosAsLong`` because the driver's ``events`` parquet carries
   INT64(TIMESTAMP_NANOS), which vanilla Spark 4 refuses to read; see
   :mod:`odns_dataimporter_spark.tables` for the µs conversion.
+- A generated-class cache that holds a repeated query run's working
+  set, and class names free of codegen stage ids, so the second run
+  reuses the first run's compiled classes (ARCHITECTURE.md,
+  "Plan-reuse conventions").
+- The checkout root on the Python workers' ``PYTHONPATH``: UDF closures
+  pickle by reference to this package, so a worker started from any
+  cwd must be able to import it.
 """
 
 from __future__ import annotations
@@ -20,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package: Python workers import it from here
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -48,6 +58,19 @@ def get_spark(
         # planning-time file pruning for the Python DataSource (odns/pyds.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # static, JVM-wide LRU of Janino-compiled classes, keyed by the
+        # generated source. One pass of the nine perfbench llm_graph
+        # queries needs about 220 distinct classes; an LRU smaller than
+        # that cyclic working set (the default is 100) never hits, so every
+        # run would recompile and re-JIT them all.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # keep the whole-stage codegen stage id out of the class name, so
+        # it is not part of the source either: AQE's re-planning numbers
+        # stages differently from run to run, and with the id in the name a
+        # repeated llm_graph pass still compiled 12-24 classes that differed
+        # from cached ones only in that id. Explain output keeps the ids.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -74,15 +74,23 @@ def test_prefix_tier_branches_identical(name, spark, sf_dir, monkeypatch):
     assert single == dist and len(single) > 0
 
 
-def test_clustering_coefficient_plan_is_hub_local(spark, sf_dir):
+def test_clustering_coefficient_plan_is_hub_local(spark, sf_dir, monkeypatch):
     """Ratchet for the r11 rewrite: the plan must not reintroduce the
     adjacency-array closing (collect_list / array_intersect) or a
     global window; hub selection stays TakeOrderedAndProject."""
     df = REGISTRY["graph_clustering_coefficient"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # (the hub TakeOrderedAndProject itself sits inside the lazy
-    # checkpoint's ExistingRDD scan, so it cannot be asserted from the
-    # outer plan string — the negative assertions are the ratchet)
     assert "collect_list" not in plan
     assert "array_intersect" not in plan
     assert "Window" not in plan
+    # The checkpoints hide their subtrees (the hub TakeOrderedAndProject
+    # among them) behind ExistingRDD scans, so build the query again with
+    # localCheckpoint as identity and assert on the whole plan.
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda self, *a, **k: self)
+    whole = REGISTRY["graph_clustering_coefficient"].fn(spark, sf_dir)
+    plan = whole._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "collect_set" in plan  # sees the edge build
+    assert "collect_list" not in plan
+    assert "array_intersect" not in plan
+    assert "Window" not in plan
+    assert "TakeOrderedAndProject" in plan
