@@ -1,4 +1,5 @@
-"""Shared determinism helpers for oracle-matched queries.
+"""Shared helpers for oracle-matched queries: exact money sums,
+timestamp rendering, distributed ranks and the text substrate.
 
 Floating-point sums are order-dependent, and Spark's partial-aggregate
 tree differs from DuckDB's, so ``SUM(double)`` can disagree in the last
@@ -40,6 +41,29 @@ def ts_str(col: Column | str) -> Column:
 
 def ts_str_sql(expr: str) -> str:
     return f"strftime({expr}, '{TS_FMT_DUCK}')"
+
+
+# Text substrate (ARCHITECTURE.md "Text substrate"). A token is a
+# single-space-separated piece of `documents.text`, empty pieces kept,
+# exactly as DuckDB's string_split(text, ' ') in the oracles.
+TOKENS_SQL = "split(text, ' ')"
+
+
+def tokens() -> Column:
+    """The token array of `text` (Column form of :data:`TOKENS_SQL`)."""
+    return F.split(F.col("text"), " ")
+
+
+def gram_hash_sql(k: int) -> str:
+    """Spark SQL for the array of 60-bit k-gram fingerprints of the
+    token array bound to `toks`: element p is the md5 of tokens
+    p+1..p+k joined by ' ', its first 15 hex digits read as a signed
+    int64. `toks` must hold at least k tokens, and must be a column or
+    lambda variable, not the raw split expression (ARCHITECTURE.md)."""
+    return (
+        f"transform(sequence(0, size(toks) - {k}), i -> CAST(conv(substr("
+        f"md5(concat_ws(' ', slice(toks, i + 1, {k}))), 1, 15), 16, 10) AS BIGINT))"
+    )
 
 
 def scalable_row_number(df, order_cols: list[str], out: str = "r"):

@@ -18,6 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odns_dataimporter_spark.queries._helpers import tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -970,7 +971,7 @@ def etl_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("ntok"),
+        F.size(tokens()).cast("long").alias("ntok"),
         F.expr(f"doc_id div {_SHARD_BLOCK}").alias("blk"),  # exact int division
     )
     bsum = t.groupBy("blk").agg(F.sum("ntok").alias("btok"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from odns_dataimporter_spark.queries._helpers import TOKENS_SQL, tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -287,7 +288,7 @@ def _with_minhash_bands(
     shuffle here carries only the per-doc minima (docs x 4 lanes), not
     the shingle stream, so the rewrite also wins at 100 TB.
     """
-    words = F.split(F.col("text"), " ")
+    words = tokens()
     base = docs.select("doc_id", "text", words.alias("_w"), F.size(words).alias("_n"))
     big = base.filter(F.col("_n") >= 3).select(
         "doc_id",
@@ -661,7 +662,7 @@ def _simhash_exprs():
     for j in range(16):
         # parity of hex digit j of md5(token)
         spark_bits.append(
-            f"CAST(aggregate(array_distinct(split(text, ' ')), 0, (acc, t) -> acc + "
+            f"CAST(aggregate(array_distinct({TOKENS_SQL}), 0, (acc, t) -> acc + "
             f"CASE WHEN (instr('0123456789abcdef', substr(md5(t), {j + 1}, 1)) - 1) % 2 = 1 "
             f"THEN 1 ELSE -1 END) >= 0 AS INT) * {1 << j}"
         )
@@ -726,7 +727,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (F.col("n_chars") / 100).cast("long").alias("lenbucket"),
-        F.array_distinct(F.split(F.col("text"), " ")).alias("toks"),
+        F.array_distinct(tokens()).alias("toks"),
     )
     a, b = t.alias("a"), t.alias("b")
     inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
@@ -874,7 +875,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan runs once (5 redundant scans before; scan-count audit)
     t = docs.select(
         "doc_id", "lang", "n_chars",
-        F.array_distinct(F.split(F.col("text"), " ")).alias("toks"),
+        F.array_distinct(tokens()).alias("toks"),
     ).withColumn("sz", F.size("toks")).localCheckpoint(eager=False)
     tok = t.select(
         "doc_id", "lang", "n_chars", "sz", F.explode("toks").alias("token")
@@ -1054,7 +1055,7 @@ def _minhash_recall(
     t = docs.select(
         "doc_id", "lang",
         (F.col("n_chars") / 100).cast("long").alias("lenbucket"),
-        F.array_distinct(F.split(F.col("text"), " ")).alias("toks"),
+        F.array_distinct(tokens()).alias("toks"),
     )
     # per-block cap — see the note above _JACCARD_TRUTH_SQL
     wcap = W.partitionBy("lang", "lenbucket").orderBy("doc_id")
@@ -1247,7 +1248,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token")
+        "doc_id", F.explode(F.array_distinct(tokens())).alias("token")
     ).withColumn(
         # One base-16 conversion folds the leading 15 md5 hex digits into a
         # single 60-bit long; each signature bit is then an integer shift
@@ -2131,7 +2132,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(prior_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias("prior_id"),
         F.when(prior_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias("new_id"),
     )
-    tk = docs.select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
+    tk = docs.select("doc_id", F.array_distinct(tokens()).alias("toks"))
     j1 = tk.join(
         F.broadcast(x), F.col("doc_id") == F.col("new_id"), "inner"
     ).select("new_id", "prior_id", F.col("toks").alias("a_toks"))
@@ -2223,7 +2224,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id",
         F.lower(F.col("text")).alias("lt"),
-        F.array_distinct(F.split(F.col("text"), " ")).alias("tkd"),
+        F.array_distinct(tokens()).alias("tkd"),
     )
     k = d.select(
         "doc_id",
@@ -2315,7 +2316,7 @@ def dedup_paragraph_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero survivors) yields NULL digest on both engines (string_agg /
     collect_list both skip the non-kept rows)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    t = docs.select("doc_id", tokens().alias("toks"))
     c = t.select(
         "doc_id",
         F.posexplode(

@@ -20,15 +20,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from odns_dataimporter_spark.queries._helpers import TOKENS_SQL, gram_hash_sql, tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
 _CHUNK = 64
 _STRIDE = 48
-
-
-def _toks():
-    return F.split(F.col("text"), " ")
 
 
 def _q6(numer, denom):
@@ -61,7 +58,7 @@ def text_chunk_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenization/packing. One explode per doc, no shuffle; chunk text is
     emitted as a digest so the verified value is the exact content."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", _toks().alias("toks"))
+    d = docs.select("doc_id", tokens().alias("toks"))
     d = d.select(
         "doc_id",
         "toks",
@@ -126,7 +123,7 @@ def text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     def dup_frac(arr):
         return _q6(F.size(arr) - F.size(F.array_distinct(arr)), F.size(arr))
 
-    toks = _toks()
+    toks = tokens()
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
@@ -293,7 +290,7 @@ def dedup_segment_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one small shuffle on doc_id; segment digests never leave the
     executors as full text."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokens()
     seg = F.explode(
         F.transform(
             F.sequence(F.lit(1), F.size(toks), F.lit(_SEG)),
@@ -355,7 +352,7 @@ def decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hygiene pass (GPT-3 §C / PaLM-style 'contaminated if any n-gram
     overlaps')."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokens()
     # guard: descending sequence() on docs shorter than the n-gram
     # (see the ngrams() note in text_repetition_score)
     grams_arr = F.when(
@@ -425,7 +422,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange)."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
-        "doc_id", "source", F.size(_toks()).cast("long").alias("n_toks")
+        "doc_id", "source", F.size(tokens()).cast("long").alias("n_toks")
     )
     w = (
         Window.partitionBy("source")
@@ -452,13 +449,12 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _distinct_trigrams(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, ngram) trigram shingles. Two perf rules
-    learned the hard way: (1) materialize the token array as a COLUMN
-    before the transform lambda — element_at on the raw split() expr
-    re-splits the string per element, O(len²) per doc (3.2 s → 0.5 s
-    at sf0.1); (2) no array_distinct — it is O(len²) interpreted
-    comparisons per row; explode and dedup relationally instead (a
-    map-side-combined aggregate, linear per row)."""
-    base = docs.withColumn("tk", F.split("text", " ")).filter(F.size("tk") >= 3)
+    learned the hard way: (1) `tk` is bound as a column before the
+    lambda reads it (ARCHITECTURE.md "Text substrate"; inlined: 3.2 s
+    instead of 0.5 s at sf0.1); (2) no array_distinct — it is O(len²)
+    interpreted comparisons per row; explode and dedup relationally
+    instead (a map-side-combined aggregate, linear per row)."""
+    base = docs.withColumn("tk", tokens()).filter(F.size("tk") >= 3)
     tri_expr = F.transform(
         F.sequence(F.lit(0), F.size("tk") - 3),
         lambda i: F.concat_ws(
@@ -509,10 +505,9 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     count folds in as a broadcast 1-row aggregate (no driver action),
     and the document frequency rides a WINDOW over the same trigram
     key (one shuffle; a groupBy + join-back would re-derive the
-    trigram explode on both sides — see text_dup_span_coverage). The
-    corpus doc count folds in as a broadcast 1-row aggregate (no
-    driver action). The boilerplate test is an integer cross-multiply
-    (df·100 ≥ 20·N) — no float threshold."""
+    trigram explode on both sides — see _dup_spans). The boilerplate
+    test is an integer cross-multiply (df·100 ≥ 20·N) — no float
+    threshold."""
     docs = load_table(spark, sf_dir, "documents")
     tri = _distinct_trigrams(docs)
     t = docs.agg(F.count("*").cast("long").alias("n_docs"))
@@ -585,7 +580,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # its token positions covered by the union of duplicated n-gram spans.
 
 _DUPSPAN_N = 4
-_DUPSPAN_HEX = 15  # 60-bit ngram fingerprint (fits signed int64)
+_DUPSPAN_HEX = 15  # oracle side of gram_hash_sql's 60-bit fingerprint
 
 
 _DUPSPAN_ORACLE = f"""
@@ -616,6 +611,37 @@ FROM base b LEFT JOIN cov USING (doc_id)
 """
 
 
+def _dup_spans(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(base, c), the stream both dup-span queries start from.
+    base: (doc_id, n_tokens, toks) for every document. c: (doc_id,
+    pos, e), one row per _DUPSPAN_N-gram whose fingerprint also
+    occurs in a different document, covering token positions
+    [pos, e)."""
+    base = docs.select(
+        "doc_id",
+        F.size(tokens()).cast("long").alias("n_tokens"),
+        tokens().alias("toks"),
+    )
+    n = _DUPSPAN_N
+    g = base.filter(F.size("toks") >= n).select(
+        "doc_id", F.posexplode(F.expr(gram_hash_sql(n))).alias("pos", "h")
+    )
+    # cross-doc duplication flag as a WINDOW over the fingerprint key,
+    # not groupBy+join-back: the join formulation re-derives the md5
+    # gram scan on BOTH sides of the join (2× the most expensive
+    # stage); the window shuffles the gram stream on h exactly once —
+    # same exchange the groupBy needed — and filters in place
+    # (measured 1.58 s → 0.9 s at sf0.1, identical rows)
+    wh = Window.partitionBy("h")
+    c = (
+        g.withColumn("lo", F.min("doc_id").over(wh))
+        .withColumn("hi", F.max("doc_id").over(wh))
+        .filter(F.col("lo") != F.col("hi"))
+        .select("doc_id", "pos", (F.col("pos") + n).alias("e"))
+    )
+    return base, c
+
+
 @register(
     "text_dup_span_coverage",
     oracle=_DUPSPAN_ORACLE,
@@ -634,36 +660,7 @@ def text_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     position counted once even under overlapping spans). Every shuffle
     is equi-keyed on fingerprint or doc_id; nothing is O(n²). The
     score is an exact-integer ratio, floor-quantized once."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        F.size(_toks()).cast("long").alias("n_tokens"),
-        _toks().alias("toks"),
-    )
-    n = _DUPSPAN_N
-    g = base.filter(F.size("toks") >= n).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(toks) - {n}), i -> "
-                f"CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, {n}))), "
-                f"1, {_DUPSPAN_HEX}), 16, 10) AS BIGINT))"
-            )
-        ).alias("pos", "h"),
-    )
-    # cross-doc duplication flag as a WINDOW over the fingerprint key,
-    # not groupBy+join-back: the join formulation re-derives the md5
-    # gram scan on BOTH sides of the join (2× the most expensive
-    # stage); the window shuffles the gram stream on h exactly once —
-    # same exchange the groupBy needed — and filters in place
-    # (measured 1.58 s → 0.9 s at sf0.1, identical rows)
-    wh = Window.partitionBy("h")
-    c = (
-        g.withColumn("lo", F.min("doc_id").over(wh))
-        .withColumn("hi", F.max("doc_id").over(wh))
-        .filter(F.col("lo") != F.col("hi"))
-        .select("doc_id", "pos", (F.col("pos") + n).alias("e"))
-    )
+    base, c = _dup_spans(load_table(spark, sf_dir, "documents"))
     w = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -745,30 +742,7 @@ def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (kept count, md5-prefix of the cleaned text) so the row stays
     fixed-width. Docs shorter than the gram width pass through
     untouched (left join → NULL interval list → identity filter)."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(
-        "doc_id",
-        F.size(_toks()).cast("long").alias("n_tokens"),
-        _toks().alias("toks"),
-    )
-    n = _DUPSPAN_N
-    g = base.filter(F.size("toks") >= n).select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, size(toks) - {n}), i -> "
-                f"CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, {n}))), "
-                f"1, {_DUPSPAN_HEX}), 16, 10) AS BIGINT))"
-            )
-        ).alias("pos", "h"),
-    )
-    wh = Window.partitionBy("h")
-    c = (
-        g.withColumn("lo", F.min("doc_id").over(wh))
-        .withColumn("hi", F.max("doc_id").over(wh))
-        .filter(F.col("lo") != F.col("hi"))
-        .select("doc_id", "pos", (F.col("pos") + n).alias("e"))
-    )
+    base, c = _dup_spans(load_table(spark, sf_dir, "documents"))
     # merge overlapping spans per doc (gaps-islands): both windows ride
     # the SAME (doc_id, pos) sort — one shuffle
     wprev = (
@@ -872,12 +846,9 @@ def text_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the bucket table is O({B}) regardless of corpus size, which
     is DSIR's point: the scorer is two broadcast tables and a scan."""
     docs = load_table(spark, sf_dir, "documents")
-    # split ONCE into a named column: referencing `toks` inside the
-    # bigram lambda must not re-evaluate split per element (Catalyst
-    # keeps the projection split because the alias is multiply
-    # referenced and non-cheap — inlining it made this op O(n_tokens²)
-    # per document, a 20x slowdown at sf0.1)
-    t = docs.select("doc_id", "lang", F.split("text", " ").alias("toks"))
+    # `toks` bound as a column before the bigram lambda reads it
+    # (ARCHITECTURE.md "Text substrate"; inlined: 20x slower at sf0.1)
+    t = docs.select("doc_id", "lang", tokens().alias("toks"))
     f = t.select(
         "doc_id",
         "lang",
@@ -892,9 +863,11 @@ def text_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploding 1M+ feature STRINGS through the row format costs 3x the
     # whole hash pass (measured at sf0.1); fixed-width longs are free.
     # The exploded stream feeds THREE consumers (bucket counts, their
-    # totals, and the per-doc reduction) — lazily localCheckpointed so
-    # the md5 pass runs once, not once per consumer; rows are slimmed
-    # to (doc_id, is_t, b) first so the checkpoint carries no strings
+    # totals, and the per-doc reduction) — localCheckpointed so the md5
+    # pass runs once, not once per consumer (under AQE it runs while the
+    # DataFrame is built: ARCHITECTURE.md, plan-reuse item 2); rows are
+    # slimmed to (doc_id, is_t, b) first so the checkpoint carries no
+    # strings
     e = f.select(
         "doc_id",
         (F.col("lang") == "en").alias("is_t"),
@@ -1009,17 +982,17 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_arr = "array" + _GOPHER_STOPWORDS
     s = docs.select(
         "doc_id",
-        F.size(_toks()).cast("long").alias("n_words"),
+        F.size(tokens()).cast("long").alias("n_words"),
         F.expr(
-            "CAST(aggregate(transform(split(text, ' '), x -> length(x)), "
+            f"CAST(aggregate(transform({TOKENS_SQL}, x -> length(x)), "
             "0L, (a, b) -> a + b) AS BIGINT)"
         ).alias("sum_len"),
         F.expr(
-            "CAST(size(filter(split(text, ' '), x -> x rlike '[a-zA-Z]')) "
+            f"CAST(size(filter({TOKENS_SQL}, x -> x rlike '[a-zA-Z]')) "
             "AS BIGINT)"
         ).alias("n_alpha"),
         F.expr(
-            f"CAST(size(array_intersect(split(text, ' '), {stop_arr})) AS BIGINT)"
+            f"CAST(size(array_intersect({TOKENS_SQL}, {stop_arr})) AS BIGINT)"
         ).alias("n_stop"),
     )
     n = F.col("n_words")
@@ -1105,7 +1078,7 @@ def sample_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round-3 capstone: the MODERN curation pipeline composed from this
 # round's methods — rule filter (Gopher) → substring-dedup gate
 # (duplicated-span coverage) → target-likeness gate (DSIR weight) —
-# the RefinedWeb/Dolma-style recipe, as ONE lazy Catalyst plan.
+# the RefinedWeb/Dolma-style recipe, composed on doc_id.
 
 @register(
     "llm_curation_pipeline_v2",
@@ -1131,12 +1104,13 @@ def llm_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fingerprint-keyed shuffles) ∧ DSIR target-likeness ≥ 0 (broadcast
     bucket table), intersected on doc_id and rolled up to the
     per-language token budget a data curator signs off on. Each stage
-    is an independently oracle-verified operator; this query proves
-    the composition stays one lazy plan — every stage's survivors
-    equi-join on doc_id, so the intersection adds doc-keyed shuffles,
-    never a rescan driven from the driver (contrast llm_prep_pipeline,
+    is an independently oracle-verified operator; every stage's
+    survivors equi-join on doc_id, so the intersection adds doc-keyed
+    shuffles, never a rescan driven from the driver. The DSIR stage's
+    checkpoint runs its jobs while the DataFrame is built
+    (ARCHITECTURE.md, plan-reuse item 2). Contrast llm_prep_pipeline,
     the v1 recipe: language/length/type-token filters + exact dedup +
-    hash sample)."""
+    hash sample."""
     docs = load_table(spark, sf_dir, "documents")
     g = (
         text_gopher_rules(spark, sf_dir)
@@ -1155,7 +1129,7 @@ def llm_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = (
         docs.select(
-            "doc_id", "lang", F.size(_toks()).cast("long").alias("n_tok")
+            "doc_id", "lang", F.size(tokens()).cast("long").alias("n_tok")
         )
         .join(g, "doc_id")
         .join(c, "doc_id")

@@ -13,11 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from odns_dataimporter_spark.queries._helpers import TOKENS_SQL, gram_hash_sql, tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
-
-def _toks():
-    return F.split(F.col("text"), " ")
 
 
 @register(
@@ -38,7 +36,7 @@ GROUP BY lang
 def text_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token statistics per language bucket."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_toks())
+    n_tok = F.size(tokens())
     return docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(n_tok).cast("long").alias("total_tokens"),
@@ -79,7 +77,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ratios are floor-quantized (identical IEEE ops on identical doubles)
     rather than rounded, to dodge round-half divergence."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokens()
     utoks = F.array_distinct(toks)
     n_tok = F.size(toks)
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
@@ -137,7 +135,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Real lang-ID would swap in fastText/CLD3 via a Pandas UDF — the
     pipeline shape is identical.)"""
     docs = load_table(spark, sf_dir, "documents")
-    utoks = F.array_distinct(_toks())
+    utoks = F.array_distinct(tokens())
     overlaps = {
         lang: F.size(F.array_intersect(utoks, F.array(*[F.lit(w) for w in ws])))
         for lang, ws in _LANG_PROFILES.items()
@@ -172,7 +170,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     token set) — catches shuffled/reordered near-copies that exact
     hashing misses, at one hash per document."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(_toks()))))
+    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens()))))
     return (
         docs.select("doc_id", fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -205,7 +203,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size as a 1-row aggregate folded into the SAME plan via a
     # broadcast cross join — no driver-side count(), no extra full scan
     nn = docs.agg(F.count("*").alias("n_docs"))
-    terms = docs.select(F.explode(F.array_distinct(_toks())).alias("term"))
+    terms = docs.select(F.explode(F.array_distinct(tokens())).alias("term"))
     return (
         terms.groupBy("term")
         .agg(F.count("*").alias("doc_freq"))
@@ -264,9 +262,8 @@ def text_bigram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     under language models and contamination checks; explode keeps the
     shuffle at |bigram vocabulary|."""
     docs = load_table(spark, sf_dir, "documents")
-    # Materialize the token array BEFORE the lambda: slicing the raw
-    # split() expression re-splits the string per element (O(len²)/doc)
-    base = docs.withColumn("words", F.split(F.col("text"), " "))
+    # bind the tokens before the lambda (ARCHITECTURE.md "Text substrate")
+    base = docs.withColumn("words", tokens())
     # guard: sequence(1, 0) is DESCENDING [1, 0] on Spark (slice start
     # 0 is an ANSI crash on a 1-token doc); DuckDB's range is empty
     bigrams = F.when(
@@ -323,7 +320,7 @@ def llm_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole thing is still one Catalyst plan with two shuffles (dedup
     groupBy + final groupBy)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     filtered = docs.filter(
@@ -370,7 +367,7 @@ def text_vocab_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    g = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    g = docs.select("doc_id", F.explode(tokens()).alias("token"))
     f = g.groupBy("token").agg(
         F.count("*").cast("long").alias("n_occ"),
         F.count_distinct("doc_id").cast("long").alias("n_docs"),
@@ -418,7 +415,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     back — even a 50k BPE vocab broadcasts) and the per-doc regroup.
     The per-doc fold runs in token-position order on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    t = docs.select("doc_id", tokens().alias("toks"))
     e = t.select(
         "doc_id", F.posexplode("toks").alias("pos", "token")
     )
@@ -467,7 +464,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
+        F.explode(F.array_distinct(tokens())).alias("token"),
     )
     return (
         pairs.groupBy("token")
@@ -522,7 +519,7 @@ def text_keywords_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus size folded into the plan as a broadcast 1-row aggregate —
     # no driver-side count(), no extra full scan / sync point
     nn = docs.agg(F.count("*").alias("n_docs"))
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("doc_id", F.explode(tokens()).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(
         F.count("*").cast("long").alias("tf")
     )
@@ -642,7 +639,7 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(tokens()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("n"))
@@ -704,7 +701,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject), one scalar output row."""
     docs = load_table(spark, sf_dir, "documents")
     wc = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(tokens()).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
@@ -772,7 +769,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     position order on both engines (associativity-proof determinism).
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
+    words = tokens()
     base = docs.select("doc_id", words.alias("_w"), F.size(words).alias("_n"))
     bi = (
         base.filter(F.col("_n") >= 2)
@@ -916,10 +913,11 @@ def tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combined, |vocab| rows survive); every merge round then
     runs on the vocabulary table, which is corpus-size-independent
     (even web-scale corpora have ~1e7 distinct words), with the
-    argmax as a broadcast 1-row min-struct aggregate — no driver
-    action, the whole 3-round chain is one lazy plan. The greedy
-    rewrite is an array fold, bit-identical on both engines
-    (['a','a','a'] with pair (a,a) → ['aa','a'])."""
+    argmax as a broadcast 1-row min-struct aggregate — no collect to
+    the driver; the symbol-table checkpoint in _bpe_learn runs its
+    jobs while the DataFrame is built (ARCHITECTURE.md, plan-reuse
+    item 2). The greedy rewrite is an array fold, bit-identical on
+    both engines (['a','a','a'] with pair (a,a) → ['aa','a'])."""
     w, bests = _bpe_learn(spark, sf_dir)
     out = None
     for r, best in enumerate(bests):
@@ -941,15 +939,17 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
     merges, list of per-round best-pair 1-row DataFrames)."""
     docs = load_table(spark, sf_dir, "documents")
     v = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
+        docs.select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("wcnt"))
     )
     # |vocab|-row symbol table with DIVERGING consumers (each round's
-    # pair stats AND the next round's rewrite) — lazily checkpointed so
-    # the corpus-scale token-count shuffle above runs once, not once
-    # per consumer per round (the mining_assoc_rules rule; identical
-    # self-join subtrees would NOT need this, diverging ones do)
+    # pair stats AND the next round's rewrite) — checkpointed so the
+    # corpus-scale token-count shuffle above runs once, not once per
+    # consumer per round (the mining_assoc_rules rule; identical
+    # self-join subtrees would NOT need this, diverging ones do). Under
+    # AQE that shuffle runs while the DataFrame is built
+    # (ARCHITECTURE.md, plan-reuse item 2)
     w = v.select(
         "token", "wcnt", F.expr("regexp_extract_all(token, '.', 0)").alias("s")
     ).localCheckpoint(eager=False)
@@ -1009,6 +1009,19 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
 
 _WIN_K = 3  # token k-gram size
 _WIN_W = 4  # winnowing window (hashes per window)
+_WIN_HS = gram_hash_sql(_WIN_K)  # the k-gram hashes `hs` of `toks`
+
+
+def _winnow_let(hs: str, fps: str, row: str):
+    """Generator over the let-bound chain toks → hs → fps: each array
+    is a single-element transform lambda variable, bound once per row,
+    and inline() exposes the `row` struct's fields as plain columns
+    (ARCHITECTURE.md "Text substrate")."""
+    return F.expr(
+        f"inline(transform(array({TOKENS_SQL}), toks -> "
+        f"transform(array({hs}), hs -> "
+        f"transform(array({fps}), fps -> {row})[0])[0]))"
+    )
 
 
 @register(
@@ -1057,20 +1070,12 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint. Window minima are recomputed per offset (O(w) per
     position — the deque trick is pointless inside a w=4 window).
 
-    The toks → hs → fps chain is LET-BOUND (single-element transform
-    lambdas, unwrapped by one inline(array(struct)) Generate):
-    expressed as stacked projections, CollapseProject inlines `toks`
-    into every window slice and `hs` into every per-window min — an
-    O(n²)-md5 blowup per document that turned this scan into the
-    slowest query in the registry. The lambda variable binds each
-    array once per row; the Generate evaluates the struct once and
-    exposes plain attributes upward."""
+    The toks → hs → fps chain is let-bound (_winnow_let): as stacked
+    projections it was an O(n²)-md5 blowup per document that made
+    this scan the slowest query in the registry."""
     docs = load_table(spark, sf_dir, "documents")
     hs = (
-        f"CASE WHEN size(toks) >= {_WIN_K} THEN "
-        f"transform(sequence(0, size(toks) - {_WIN_K}), "
-        f"i -> CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, {_WIN_K}))), "
-        "1, 15), 16, 10) AS BIGINT)) "
+        f"CASE WHEN size(toks) >= {_WIN_K} THEN {_WIN_HS} "
         "ELSE CAST(array() AS array<bigint>) END"
     )
     fps = (
@@ -1087,14 +1092,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(size(fps) AS BIGINT) AS n_fingerprints, "
         "md5(concat_ws(',', fps)) AS fingerprint_digest)"
     )
-    return docs.select(
-        "doc_id",
-        F.expr(
-            "inline(transform(array(split(text, ' ')), toks -> "
-            f"transform(array({hs}), hs -> "
-            f"transform(array({fps}), fps -> {row})[0])[0]))"
-        ),
-    )
+    return docs.select("doc_id", _winnow_let(hs, fps, row))
 
 
 @register(
@@ -1132,29 +1130,15 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint-based plagiarism detectors scale to web corpora. The
     per-window minima here drop the position tag (matching is by
     hash; positions only matter for span display). The toks → hs →
-    fps chain is let-bound exactly as in text_winnow_fingerprints
-    (see that docstring): stacked projections would re-inline the
-    hash array into every window min — O(n²) md5s per document."""
+    fps chain is let-bound (_winnow_let)."""
     docs = load_table(spark, sf_dir, "documents")
-    hs = (
-        f"transform(sequence(0, size(toks) - {_WIN_K}), "
-        f"i -> CAST(conv(substr(md5(concat_ws(' ', slice(toks, i + 1, {_WIN_K}))), "
-        "1, 15), 16, 10) AS BIGINT))"
-    )
     fps = (
         f"array_distinct(transform(sequence(0, size(hs) - {_WIN_W}), "
         f"p -> array_min(slice(hs, p + 1, {_WIN_W}))))"
     )
     row = "struct(CAST(size(fps) AS BIGINT) AS n_fp, fps AS fps)"
-    w = docs.filter(
-        F.size(F.split("text", " ")) >= _WIN_K + _WIN_W - 1
-    ).select(
-        "doc_id",
-        F.expr(
-            "inline(transform(array(split(text, ' ')), toks -> "
-            f"transform(array({hs}), hs -> "
-            f"transform(array({fps}), fps -> {row})[0])[0]))"
-        ),
+    w = docs.filter(F.size(tokens()) >= _WIN_K + _WIN_W - 1).select(
+        "doc_id", _winnow_let(_WIN_HS, fps, row)
     )
     e = w.select("doc_id", "n_fp", F.explode("fps").alias("fp"))
     a = e.select(
@@ -1229,7 +1213,7 @@ def tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("token").cast("long").alias("n_chars"),
     )
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    d = docs.select("doc_id", F.explode(tokens()).alias("token"))
     return (
         d.join(F.broadcast(enc), "token")
         .groupBy("doc_id")
@@ -1289,7 +1273,7 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = spark.createDataFrame(
         sorted(_SENT_LEX.items()), schema="token string, pol int"
     )
-    e = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    e = docs.select("doc_id", F.explode(tokens()).alias("token"))
     j = e.join(F.broadcast(lex), "token", "left").select(
         "doc_id", F.coalesce("pol", F.lit(0)).alias("pol")
     )
@@ -1453,7 +1437,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     is that the phrase graph never materializes — degree is just
     Σ plen per word."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    t = docs.select("doc_id", tokens().alias("toks"))
     e = t.select(
         "doc_id", F.posexplode("toks").alias("pos", "tok")
     ).withColumn(
@@ -1542,7 +1526,7 @@ def text_hapax_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-quantized once."""
     docs = load_table(spark, sf_dir, "documents")
     f = (
-        docs.select("lang", F.explode(F.split("text", " ")).alias("w"))
+        docs.select("lang", F.explode(tokens()).alias("w"))
         .groupBy("lang", "w")
         .agg(F.count("*").cast("long").alias("c"))
     )
@@ -1598,8 +1582,9 @@ def text_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     + D·N1+(w1·)/c(w1·) · N1+(·w2)/N1+(··), D = 0.75 (observed bigrams
     only, so the max() never clamps). Shape: ONE corpus pass builds the
     bigram-count table (map-side combined, vocabulary²-bounded), which
-    is lazily checkpointed once and feeds every statistic — prefix
-    totals AND distinct-continuation counts come from a single groupBy
+    is checkpointed once (under AQE its jobs run while the DataFrame is
+    built: ARCHITECTURE.md, plan-reuse item 2) and feeds every
+    statistic — prefix totals AND distinct-continuation counts come from a single groupBy
     (SUM + COUNT over the same key), context diversity from a groupBy
     on w2, and the type total from a 1-row aggregate; all four join
     back as broadcasts. The corpus-sized stream is touched exactly
@@ -1607,7 +1592,7 @@ def text_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios of exact integer counts in an identical expression shape on
     both engines, floor-quantized once."""
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split("text", " ")
+    words = tokens()
     base = docs.select("doc_id", words.alias("_w"), F.size(words).alias("_n"))
     bi = (
         base.filter(F.col("_n") >= 2)
@@ -1672,14 +1657,16 @@ def _bm25_substrate(
     the (doc, term) tf table from two independent reads of `documents`
     — two parquet scans, two tokenizes (the split is the expensive
     part). Here one narrow per-doc projection (doc_id, dl,
-    matched-terms array) is lazily localCheckpointed and BOTH
+    matched-terms array) is localCheckpointed and BOTH
     consumers read it: filter() keeps every row (empty match array,
     never a dropped doc), so n_docs/Σdl over the projection equal the
     full-corpus stats bit-for-bit, and explode(mt) emits exactly the
     rows the old explode-then-isin kept. The checkpoint holds three
-    tiny columns, never the text. tf keeps its own lazy checkpoint —
-    it still feeds both the df aggregate and the scorer."""
-    toks = F.split("text", " ")
+    tiny columns, never the text. tf keeps its own checkpoint — it
+    still feeds both the df aggregate and the scorer. Under AQE both
+    checkpoints run their jobs while the DataFrame is built
+    (ARCHITECTURE.md, plan-reuse item 2)."""
+    toks = tokens()
     perdoc = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("dl"),
@@ -2121,15 +2108,14 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     template/spam text next to `text_repetition_score`. Docs shorter
     than the window fall back to plain TTR (documented convention).
     Shape: a pure per-document map — zero shuffles, the ideal corpus
-    operator; the token array is LET-BOUND via the single-element-
-    array transform idiom so CollapseProject cannot inline split()
-    into every window position (the round-5 O(n²) HOF trap), making
-    the sweep O(n·W) string work per doc. All counts exact int64; one
-    late floor-q6 division."""
+    operator; the token array is let-bound by a single-element-array
+    transform (ARCHITECTURE.md "Text substrate"), making the sweep
+    O(n·W) string work per doc. All counts exact int64; one late
+    floor-q6 division."""
     docs = load_table(spark, sf_dir, "documents")
     per_doc = F.element_at(
         F.transform(
-            F.array(F.split("text", " ")),
+            F.array(tokens()),
             lambda tk: F.struct(
                 F.size(tk).cast("long").alias("n_tokens"),
                 F.size(F.array_distinct(tk)).cast("long").alias("n_types"),
@@ -2324,7 +2310,7 @@ def tokenizer_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).alias("pos"), F.lit(0).alias("np"), F.lit(0).alias("unk")
     )
     vterms = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
+        docs.select(F.explode(tokens()).alias("token"))
         .distinct()
         .select(
             "token",
@@ -2343,7 +2329,7 @@ def tokenizer_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("st.unk").cast("long").alias("n_unk"),
         F.length("token").cast("long").alias("n_chars"),
     )
-    d = docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+    d = docs.select("doc_id", F.explode(tokens()).alias("token"))
     return (
         d.join(F.broadcast(enc), "token")
         .groupBy("doc_id")
@@ -2412,7 +2398,7 @@ def text_readability_smog(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees, non-binary-exact constants CAST to DOUBLE on the DuckDB
     side (bare literals parse as DECIMAL there)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = tokens()
 
     def groups(w):
         return F.size(F.split(w, "[aeiouy]+")) - 1
@@ -2520,7 +2506,7 @@ def text_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 0.25; single-token docs are excluded on both engines (no
     scorable pair)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = tokens()
     green = lambda prev, cur: (  # noqa: E731
         F.conv(F.substring(F.md5(F.concat(prev, F.lit("|"), cur)), 1, 8), 16, 10)
         .cast("long")
@@ -2606,7 +2592,7 @@ def text_bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios of exact int64 counts; each bigram's entropy term
     floor-quantizes to int64 nanos before the cross-bigram sum."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(F.split("text", " ").alias("toks"))
+    t = docs.select(tokens().alias("toks"))
     bg = t.select(
         F.posexplode(
             F.expr("transform(slice(toks, 1, size(toks) - 1), (w, i) -> "
@@ -2775,7 +2761,7 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — the round-8 wordpiece finding)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
+        "doc_id", F.explode(tokens()).alias("token")
     )
     vterms = toks.groupBy("token").agg(F.count("*").cast("long").alias("f"))
     vterms = vterms.localCheckpoint(eager=False)
@@ -2982,13 +2968,13 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") * _HEAPS_BINS / F.col("hi")).cast("long"),
             F.lit(_HEAPS_BINS - 1).cast("long"),
         ).alias("dec"),
-        F.size(F.split("text", " ")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
     )
     tok_bin = dd.groupBy("dec").agg(F.sum("n_tok").cast("long").alias("toks"))
     firsts = (
         docs.select(
             "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("term"),
+            F.explode(F.array_distinct(tokens())).alias("term"),
         )
         .groupBy("term")
         .agg(F.min("doc_id").alias("first_doc"))
@@ -3109,7 +3095,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     division."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+        "doc_id", F.explode(tokens()).alias("term")
     )
     per_doc = tok.groupBy("term", "doc_id").agg(
         F.count("*").cast("long").alias("x")
@@ -3199,7 +3185,7 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-vocab cut breaks count ties on the word itself."""
     docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
+        "doc_id", F.explode(tokens()).alias("w")
     ).distinct()
     df = dw.groupBy("w").agg(F.count("*").cast("long").alias("c"))
     # r10 (VERDICT r9 item 5 sweep): the top-vocab cut is orderBy +
@@ -3331,7 +3317,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering ambiguity."""
     docs = load_table(spark, sf_dir, "documents")
     dw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
+        "doc_id", F.explode(tokens()).alias("w")
     ).distinct()
     dfreq = dw.groupBy("w").agg(F.count("*").cast("long").alias("c"))
     voc = (

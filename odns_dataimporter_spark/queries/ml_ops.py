@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from odns_dataimporter_spark.queries._helpers import tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -477,7 +478,7 @@ def ml_naive_bayes_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count table. Counts are exact; the single ln-of-ratio is rounded
     at 1e-6 (the `text_tfidf` idf precedent)."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("lang", F.explode(F.split("text", " ")).alias("token"))
+    tok = docs.select("lang", F.explode(tokens()).alias("token"))
     cnt = tok.groupBy("lang", "token").agg(F.count("*").cast("long").alias("n"))
     totals = cnt.groupBy("lang").agg(F.sum("n").cast("long").alias("t_c"))
     vocab = tok.agg(F.countDistinct("token").cast("long").alias("v"))
@@ -1292,7 +1293,7 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 so the parity is trivially bit-exact."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
+        "doc_id", F.explode(tokens()).alias("token")
     )
     hv = F.expr(
         f"CAST(conv(substr(md5(concat('{_FH_SALT}', token)), 1, 8), 16, 10)"

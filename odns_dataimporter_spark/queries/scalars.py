@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from odns_dataimporter_spark.queries._helpers import money_sum, money_sum_sql
+from odns_dataimporter_spark.queries._helpers import money_sum, money_sum_sql, tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -40,7 +40,7 @@ FROM documents
 def fn_string_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """substr/length/upper/split/replace/concat string family."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tokens()
     return docs.select(
         "doc_id",
         F.length("text").cast("long").alias("len_chars"),

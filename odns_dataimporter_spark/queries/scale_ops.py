@@ -15,6 +15,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odns_dataimporter_spark.queries._helpers import tokens
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -684,7 +685,7 @@ def sample_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.groupBy("source").agg(
         F.sum("n_chars").cast("long").alias("sc"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias("st"),
+        F.sum(F.size(tokens())).cast("long").alias("st"),
     )
     one = d.agg(
         F.array_sort(

@@ -24,9 +24,16 @@ import os
 # a kNN scoring task materializes two blocks as numpy matrices; parquet
 # float-array columns are near-incompressible, so file bytes ~ raw bytes
 _KNN_TARGET_BLOCK_BYTES = 64 << 20  # two 64 MB blocks per task
-# rough parquet footprint of one embedding row (64 x float32 + ids)
-_EMBEDDING_ROW_BYTES = 300
 _LSH_TARGET_BUCKET = 64  # aim for ~64 vectors per LSH bucket
+
+# rough parquet footprint of one row, per table
+_ROW_BYTES = {
+    "embeddings": 300,  # 64 x float32 + ids
+    "documents": 120,  # short synthetic text
+    "events": 21,  # narrow typed columns
+    "part": 9,  # the graph family's node universe is the part key space
+    "orders": 18,  # sf0.1: 2.72 MB / 150k
+}
 
 
 def table_bytes(sf_dir: str, name: str) -> int:
@@ -42,6 +49,14 @@ def table_bytes(sf_dir: str, name: str) -> int:
         return os.path.getsize(path)
     except OSError:
         return 0
+
+
+def est_rows(sf_dir: str, table: str) -> int:
+    """Estimated row count of one table from its file bytes: at least 1
+    when the size is known, 0 when it is not (callers then fall back to
+    their unknown-size default)."""
+    b = table_bytes(sf_dir, table)
+    return max(1, b // _ROW_BYTES[table]) if b > 0 else 0
 
 
 def derived_knn_blocks(sf_dir: str) -> int:
@@ -62,16 +77,13 @@ def derived_lsh_planes(sf_dir: str) -> int:
     (candidate generation is O(bucket^2) summed over buckets). Clamped
     to [4, 24]: fewer than 4 planes stops discriminating, more than 24
     means buckets of one vector and zero recall."""
-    b = table_bytes(sf_dir, "embeddings")
-    if b <= 0:
+    n = est_rows(sf_dir, "embeddings")
+    if n == 0:
         return 8
-    est_rows = max(1, b // _EMBEDDING_ROW_BYTES)
-    n_buckets = max(2, est_rows // _LSH_TARGET_BUCKET)
+    n_buckets = max(2, n // _LSH_TARGET_BUCKET)
     return max(4, min(24, (n_buckets - 1).bit_length()))
 
 
-# rough parquet footprint of one documents row (short synthetic text)
-_DOC_ROW_BYTES = 120
 # switch the 60-bit SimHash pigeonhole layout once the corpus
 # approaches 2^15-bucket saturation: with 4x15-bit single-chunk keys
 # the expected bucket holds est_docs/2^15 signatures and the
@@ -92,11 +104,10 @@ def derived_simhash_chunks(sf_dir: str) -> int:
     chunk of 4, or an intact 3-combo of 6) and the exact bit_count
     verify makes the OUTPUT layout-invariant — only cost moves
     (tests/test_round9_invariants.py pins result equality)."""
-    b = table_bytes(sf_dir, "documents")
-    if b <= 0:
+    n = est_rows(sf_dir, "documents")
+    if n == 0:
         return 6  # size unknown: the prod layout is safe at any scale
-    est_docs = max(1, b // _DOC_ROW_BYTES)
-    return 4 if est_docs < _SIMHASH_PROD_DOCS else 6
+    return 4 if n < _SIMHASH_PROD_DOCS else 6
 
 
 def derived_pq_salt(sf_dir: str) -> int:
@@ -105,15 +116,10 @@ def derived_pq_salt(sf_dir: str) -> int:
     Aim for ~1k sub-vectors per task (numpy argmin is O(us) per row —
     bigger slices amortize the Arrow/worker round-trip; more slices only
     pay off once there are rows to fill them), clamped to [4, 64]."""
-    b = table_bytes(sf_dir, "embeddings")
-    if b <= 0:
+    n = est_rows(sf_dir, "embeddings")
+    if n == 0:
         return 64  # size unknown: favor parallelism
-    est_rows = max(1, b // _EMBEDDING_ROW_BYTES)
-    return max(4, min(64, est_rows // 1000))
-
-
-# rough parquet footprint of one events row (narrow typed columns)
-_EVENTS_ROW_BYTES = 21
+    return max(4, min(64, n // 1000))
 
 
 def derived_range_bins(sf_dir: str) -> int:
@@ -128,18 +134,14 @@ def derived_range_bins(sf_dir: str) -> int:
     is fixed, so density scales with row count. Clamped to [1, 256];
     on a real cluster feed this from catalog row counts + the actual
     time span instead of os.stat."""
-    b = table_bytes(sf_dir, "events")
-    if b <= 0:
+    n = est_rows(sf_dir, "events")
+    if n == 0:
         return 8
-    est_rows = max(1, b // _EVENTS_ROW_BYTES)
-    per_window = (est_rows // 5) / 720.0  # 30-day span, 1-hour windows
+    per_window = (n // 5) / 720.0  # 30-day span, 1-hour windows
     m = round((2.0 * per_window) ** 0.5)
     return max(1, min(256, m))
 
 
-# rough parquet footprint of one part row (the graph family's node
-# universe is the part key space)
-_PART_ROW_BYTES = 9
 # a single-task sort of the node-degree table is FASTER than the
 # range-partitioned two-pass until the node table itself is big: the
 # distributed rank pays a fixed sampling job + one extra shuffle +
@@ -166,26 +168,22 @@ def derived_semdedup_k(sf_dir: str) -> int:
     twin's count-derived k at every rehearsed tier (500 rows -> 8,
     20k -> 10, 200k -> 100); a small divergence only moves cluster
     granularity, never correctness (the op is rows-only by design)."""
-    b = table_bytes(sf_dir, "embeddings")
-    if b <= 0:
+    n = est_rows(sf_dir, "embeddings")
+    if n == 0:
         return 8
-    est_rows = max(1, b // _EMBEDDING_ROW_BYTES)
-    return max(8, est_rows // 2000)
+    return max(8, n // 2000)
 
 
 def derived_semdedup_sample_mod(sf_dir: str) -> int:
     """Hash-sample modulus for kmeans centroid training: keep the
     training set under ~_SEMDEDUP_TRAIN_CAP vectors (vec hash % mod ==
     0 selects ~1/mod of the corpus, order-independently)."""
-    b = table_bytes(sf_dir, "embeddings")
-    if b <= 0:
+    n = est_rows(sf_dir, "embeddings")
+    if n == 0:
         return 1
-    est_rows = max(1, b // _EMBEDDING_ROW_BYTES)
-    return max(1, est_rows // _SEMDEDUP_TRAIN_CAP)
+    return max(1, n // _SEMDEDUP_TRAIN_CAP)
 
 
-# rough parquet footprint of one orders row (sf0.1: 2.72 MB / 150k)
-_ORDERS_ROW_BYTES = 18
 # a single-task running-sum window over the distinct-value histogram
 # is FASTER than the range-partitioned two-pass until the histogram
 # itself is big (same trade as _RANK_DISTRIBUTED_NODES: the
@@ -202,13 +200,10 @@ def derived_prefix_distributed(sf_dir: str, table: str = "orders") -> bool:
     IDENTICAL either way (int64 prefix sums are associative; equality
     pinned in tests/test_round11_invariants.py) — only the plan shape
     moves, exactly like derived_rank_distributed below."""
-    row_bytes = {"orders": _ORDERS_ROW_BYTES, "events": _EVENTS_ROW_BYTES}.get(
-        table, _ORDERS_ROW_BYTES
-    )
-    b = table_bytes(sf_dir, table)
-    if b <= 0:
+    n = est_rows(sf_dir, table)
+    if n == 0:
         return True  # size unknown: never risk the single-task sort
-    return (b // row_bytes) >= _PREFIX_DISTRIBUTED_ROWS
+    return n >= _PREFIX_DISTRIBUTED_ROWS
 
 
 def derived_rank_distributed(sf_dir: str) -> bool:
@@ -221,7 +216,7 @@ def derived_rank_distributed(sf_dir: str) -> bool:
     helper reproduces row_number exactly; tests pin equality). Output
     never moves with the tier — only the plan shape, exactly like the
     simhash chunk tiering above."""
-    b = table_bytes(sf_dir, "part")
-    if b <= 0:
+    n = est_rows(sf_dir, "part")
+    if n == 0:
         return True  # size unknown: never risk the single-task sort
-    return (b // _PART_ROW_BYTES) >= _RANK_DISTRIBUTED_NODES
+    return n >= _RANK_DISTRIBUTED_NODES
