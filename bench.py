@@ -14,9 +14,13 @@ entries are emitted in HEADLINE order until the budget is reached;
 query, min/median stats, ingest, sf1 rehearsal ratios) is written to
 BENCH_FULL.json beside this script.
 
-Execution is forced with the noop sink (full computation, no driver
-collect). Each query runs twice; the second (warm) time is reported so
-JVM/JIT and file-listing warmup don't dominate at small scale.
+Each run goes through `registry.run_query`: build, plan and a noop-sink
+write (full computation, no driver collect). After one warmup run the
+best warm write time is reported, so JVM/JIT and file-listing warmup
+don't dominate at small scale. `value` and the stdout line stay
+write-only so the cross-round trend keeps its meaning; BENCH_FULL.json
+adds each query's build/plan/execute phases and job counts and the
+end-to-end total `value_e2e`.
 """
 
 from __future__ import annotations
@@ -26,10 +30,11 @@ import os
 import re
 import sys
 import time
+from dataclasses import asdict
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from odns_dataimporter_spark.registry import REGISTRY, all_queries
+from odns_dataimporter_spark.registry import REGISTRY, all_queries, run_query
 from odns_dataimporter_spark.session import get_spark
 
 HEADLINE = [
@@ -192,6 +197,12 @@ HEADLINE = [
 # The round is inferred from the BENCH_r{N}.json files the driver
 # commits per round.
 _CORE_N = 30
+# a fifth (was a quarter before r11): the 10 always-printed slow slots
+# cost ~10 rotation slots per round, so the provable full-coverage
+# window moves from 4 to 5 rounds — the measured line capacity (~24
+# rotation entries at realistic digit widths) covers step=21 with
+# slack every round.
+_ROTATION_STEP = (len(HEADLINE) - _CORE_N + 4) // 5
 
 
 def _current_round() -> int:
@@ -219,21 +230,29 @@ def _print_order(
     consecutive rounds (pinned in test_bench_contract.py)."""
     rnd = _current_round() if round_no is None else round_no
     core = HEADLINE[:_CORE_N]
-    rest = [n for n in HEADLINE if n not in core]
-    # a fifth (was a quarter before r11): the 10 always-printed slow
-    # slots cost ~10 rotation slots per round, so the provable
-    # full-coverage window moves from 4 to 5 rounds — the measured
-    # line capacity (~24 rotation entries at realistic digit widths)
-    # covers step=21 with slack every round.
-    step = (len(rest) + 4) // 5
-    k = (rnd * step) % len(rest) if rest else 0
+    rest = HEADLINE[_CORE_N:]
+    k = (rnd * _ROTATION_STEP) % len(rest) if rest else 0
     rotated = rest[k:] + rest[:k]
     if timings:
-        slow10 = sorted(
-            (n for n in rest if n in timings), key=lambda n: -timings[n]
-        )[:10]
+        slow10 = _slowest10(timings)
         rotated = slow10 + [n for n in rotated if n not in slow10]
     return list(core) + rotated
+
+
+def _slowest10(timings: dict[str, float]) -> list[str]:
+    rest = HEADLINE[_CORE_N:]
+    return sorted((n for n in rest if n in timings), key=lambda n: -timings[n])[:10]
+
+
+def stdout_coverage(line: str, timings: dict[str, float]) -> dict[str, int]:
+    """How many rotated entries the stdout `line` kept after the core and
+    the slowest 10 of `timings`, beside the rotation step. Every
+    headliner gets a printed slot within 5 rounds only while
+    ``rotation_kept >= rotation_step``; how many entries fit depends on
+    the digit widths of the run, so main records both."""
+    skip = set(HEADLINE[:_CORE_N]) | set(_slowest10(timings))
+    kept = [n for n in json.loads(line)["queries"] if n not in skip]
+    return {"rotation_step": _ROTATION_STEP, "rotation_kept": len(kept)}
 
 
 PRINT_ORDER = _print_order()
@@ -411,16 +430,10 @@ def main() -> None:
     # must record intrinsic throughput, not end-of-session host heat.
     ingest = _bench_ingest(spark)
 
-    def run(name: str) -> float:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     timings: dict[str, float] = {}
     stats: dict[str, dict] = {}
     for name in names:
-        run(name)  # warmup
+        run_query(spark, name, sf_dir)  # warmup
         # best-of-N warm runs: machine-load noise reached ±2x across
         # round-5 runs; the minimum is the stable estimator of
         # intrinsic cost. Adaptive N (round-6, 73 headliners): two
@@ -428,19 +441,26 @@ def main() -> None:
         # only re-samples the outlier tail, which matters when the
         # first two DISAGREE (>25%) or the query is expensive enough
         # (>0.5 s) for load spikes to distort the min.
-        samples = sorted(run(name) for _ in range(2))
+        runs = [run_query(spark, name, sf_dir) for _ in range(2)]
+        samples = sorted(r.execute_s for r in runs)
         if samples[1] > 0.5 or samples[1] > 1.25 * samples[0]:
-            samples = sorted(samples + [run(name)])
+            runs.append(run_query(spark, name, sf_dir))
+            samples = sorted(r.execute_s for r in runs)
+        best = min(runs, key=lambda r: r.e2e_s)
         timings[name] = round(samples[0], 4)
         stats[name] = {
             "min": round(samples[0], 4),
             "median": round(samples[len(samples) // 2], 4),
+            # the phases of the fastest end-to-end run
+            "e2e_s": round(best.e2e_s, 4),
+            **{k: round(v, 4) for k, v in asdict(best).items() if k != "name"},
         }
 
     here = os.path.dirname(os.path.abspath(__file__))
     full_payload = {
         "metric": "headline_queries_total_warm",
         "value": round(sum(timings.values()), 4),
+        "value_e2e": round(sum(st["e2e_s"] for st in stats.values()), 4),
         "unit": "sec",
         "queries": timings,
         "queries_stats": stats,
@@ -463,14 +483,12 @@ def main() -> None:
             "ratios": {n: v.get("ratio") for n, v in sc.get("queries", {}).items()},
             "worst": sc.get("worst"),
         }
+    line = build_stdout_payload(timings, ingest, sf, order=_print_order(timings=timings))
+    full_payload["stdout_coverage"] = stdout_coverage(line, timings)
     with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
         json.dump(full_payload, f, indent=1)
         f.write("\n")
-    print(
-        build_stdout_payload(
-            timings, ingest, sf, order=_print_order(timings=timings)
-        )
-    )
+    print(line)
     spark.stop()
 
 

@@ -768,8 +768,11 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both directions of every edge in ONE streamed projection over
     # the checkpoint: feeds the degree aggregate AND the neighborhood
-    # join, so the E-row checkpoint is read 3 times total (deg, nbr,
-    # closing) instead of 5 — each read is a multi-GB sequential disk
+    # join, so the E-row checkpoint is read 4 times per run instead
+    # of 7: deg (while `hubs` is built), each side of the `pairs`
+    # self-join of nbr, and the closing join. The two nbr sides share
+    # no exchange; the final AQE plan of a write at sf0.001 reuses
+    # only the hub broadcast. Each read is a multi-GB sequential disk
     # pass at the DISK_ONLY tier.
     stacked = edges.select(
         F.explode(

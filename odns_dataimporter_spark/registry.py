@@ -5,6 +5,8 @@ registered together with the ANSI SQL a DuckDB oracle can run over the
 same parquet tables. ``__spark_entry__.queries()`` / ``oracle_sql()``
 are thin views over this registry, and the local parity test
 (tests/test_oracle_parity.py) replays the driver's comparison.
+``run_query`` is the one timed run of a registered query (bench.py,
+tools/scale_rehearsal.py and the tests time queries through it).
 
 Determinism conventions (so order-insensitive value hashes match):
 
@@ -19,6 +21,8 @@ Determinism conventions (so order-insensitive value hashes match):
 
 from __future__ import annotations
 
+import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -72,3 +76,50 @@ def all_oracles() -> dict[str, str]:
     import odns_dataimporter_spark.queries  # noqa: F401
 
     return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
+
+
+@dataclass(frozen=True)
+class QueryRun:
+    """Wall-clock phases and Spark job counts of one ``run_query`` call."""
+
+    name: str
+    build_s: float  # the query function; includes jobs that AQE runs for checkpoints
+    plan_s: float  # executedPlan()
+    execute_s: float  # the noop write
+    build_jobs: int  # jobs started while building
+    jobs: int  # jobs started by the whole run
+
+    @property
+    def e2e_s(self) -> float:
+        return self.build_s + self.plan_s + self.execute_s
+
+
+# setJobGroup sets all three; run_query puts back what the caller had
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+def run_query(spark: SparkSession, name: str, sf_dir: str) -> QueryRun:
+    """Build, plan and execute (``noop`` sink) one registered query under
+    a job group of its own, and time each phase. No DataFrame is returned,
+    so its py4j plan handle is dropped when this returns and the run's
+    checkpoint blocks can be released before the next run. Raises
+    ``KeyError`` for a name that is not registered."""
+    fn = REGISTRY[name].fn
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    group = f"run_query/{name}/{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        df._jdf.queryExecution().executedPlan()
+        t2 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        t3 = time.perf_counter()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return QueryRun(name, t1 - t0, t2 - t1, t3 - t2, build_jobs, jobs)

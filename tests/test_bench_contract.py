@@ -156,3 +156,31 @@ def test_full_registry_artifact_covers_every_query():
     oracle_backed = {n for n in REGISTRY if REGISTRY[n].oracle is not None}
     wrong = [n for n in rows_only if n in oracle_backed]
     assert not wrong, f"oracle-backed queries recorded rows_only: {wrong}"
+
+
+def test_stdout_coverage_counts_kept_rotation_entries():
+    """main records in BENCH_FULL.json how many rotated entries the
+    printed line kept after the core and the slowest 10, beside the
+    rotation step, so a run whose digit widths squeeze the rotation
+    below one step shows it in the artifact (ADVICE bench.py:220)."""
+    import json
+
+    rest = bench.HEADLINE[bench._CORE_N :]
+    step = (len(rest) + 4) // 5
+    ingest = {"rows": 1_000_000, "sec": 1.2295, "rows_per_sec": 813370}
+    realistic = {n: 0.25 for n in bench.HEADLINE}
+    for n in rest[::7][:10]:
+        realistic[n] = 3.21
+    worst = {n: 99999.99 for n in bench.HEADLINE}
+    kept_by_case = []
+    for timings in (realistic, worst):
+        order = bench._print_order(3, timings=timings)
+        line = bench.build_stdout_payload(timings, ingest, 0.1, order=order)
+        kept = len(json.loads(line)["queries"])
+        coverage = bench.stdout_coverage(line, timings)
+        assert coverage == {
+            "rotation_step": step,
+            "rotation_kept": kept - bench._CORE_N - 10,
+        }
+        kept_by_case.append(coverage["rotation_kept"])
+    assert kept_by_case[0] >= step > kept_by_case[1]

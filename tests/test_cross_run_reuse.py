@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import odns_dataimporter_spark.tables as tables
-from odns_dataimporter_spark.registry import REGISTRY, all_queries
+from odns_dataimporter_spark.registry import all_queries, run_query
 from odns_dataimporter_spark.tables import TABLES, load_table
 
 all_queries()
@@ -44,7 +44,7 @@ def test_repeated_run_reuses_generated_classes(spark, sf_dir):
     for _ in range(2):
         before = compiles.getCount()
         for name in LLM_GRAPH:
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            run_query(spark, name, sf_dir)
         counts.append(compiles.getCount() - before)
     first, second = counts
     assert second <= 0.1 * first, f"compiled {first} classes, then {second}"

@@ -51,7 +51,7 @@ import time
 
 import pytest
 
-from odns_dataimporter_spark.registry import REGISTRY, all_queries
+from odns_dataimporter_spark.registry import REGISTRY, all_queries, run_query
 
 all_queries()
 
@@ -230,12 +230,8 @@ def test_gate_still_fails_structural_slowness(spark, sentinel_baseline):
 @pytest.mark.budget
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_within_budget(name, spark, sf_dir, sentinel_baseline):
-    spec = REGISTRY[name]
-
     def one_run() -> float:
-        t0 = time.perf_counter()
-        spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        return run_query(spark, name, sf_dir).e2e_s
 
     _gate(spark, name, one_run, _BUDGET_SEC, "sf0.001")
 
@@ -252,12 +248,7 @@ def test_query_within_budget(name, spark, sf_dir, sentinel_baseline):
 @pytest.mark.budget01
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_within_budget_sf001(name, spark, sentinel_baseline):
-    spec = REGISTRY[name]
-
     def one_run() -> float:
-        t0 = time.perf_counter()
-        df = spec.fn(spark, "/root/testdata/sf0.01")
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        return run_query(spark, name, "/root/testdata/sf0.01").e2e_s
 
     _gate(spark, name, one_run, _BUDGET01_SEC, "sf0.01")

@@ -30,7 +30,6 @@ per partition and the other 31 cores absorb the remaining keys.
 from __future__ import annotations
 
 import os
-import time
 
 import duckdb
 import numpy as np
@@ -39,7 +38,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from odns_dataimporter_spark.oracle import compare
-from odns_dataimporter_spark.registry import REGISTRY, all_queries
+from odns_dataimporter_spark.registry import REGISTRY, all_queries, run_query
 
 all_queries()
 
@@ -98,9 +97,7 @@ def skew_dirs(tmp_path_factory):
 
 
 def _run(spark, name: str, d: str) -> float:
-    t0 = time.perf_counter()
-    REGISTRY[name].fn(spark, d).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+    return run_query(spark, name, d).e2e_s
 
 
 @pytest.mark.parametrize("name", _WINDOW_OPS)

@@ -5,8 +5,10 @@ sf1 (10x) in one session and report per-query scaling ratios.
 The 100-TB design claims in ARCHITECTURE.md are arguments; this is the
 measurement. Data growth is 10x, so a query whose runtime scales ~<=10x
 is at-worst-linear; >15x earns a root-cause note (VERDICT r5 item 1).
-Ratios use min-of-N warm runs (min is the stable estimator under the
-+-2x machine-load noise measured in round 5); medians are recorded too.
+Ratios use the min-of-N end-to-end (build + plan + execute) time of
+warm `registry.run_query` runs (min is the stable estimator under the
++-2x machine-load noise measured in round 5); medians and the
+write-only `execute_min` are recorded too.
 
 sf1 data: python tools/gen_sf.py --sf 1 --out .sfdata/sf1  (shape-
 faithful to the driver testdata; see the gen_sf docstring).
@@ -22,12 +24,11 @@ import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
-from odns_dataimporter_spark.registry import REGISTRY, all_queries  # noqa: E402
+from odns_dataimporter_spark.registry import REGISTRY, QueryRun, all_queries, run_query  # noqa: E402
 from odns_dataimporter_spark.session import get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -66,18 +67,15 @@ def main() -> None:
         # targets the ANN family, which is not a bench headliner)
         names = [n for n in a.only.split(",") if n in REGISTRY]
 
-    def run_once(name: str, sf_dir: str) -> float:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # drop the py4j plan handles NOW so ContextCleaner can release
-        # this run's lazy-localCheckpoint blocks before the next run
-        # allocates its own — at the sf10 tier three runs' worth of
-        # retained checkpoint RDDs OOM'd a 16g driver (each run of a
+    def run_once(name: str, sf_dir: str) -> QueryRun:
+        run = run_query(spark, name, sf_dir)
+        # run_query keeps no plan handle: collect the dropped py4j
+        # handles NOW so ContextCleaner can release this run's
+        # lazy-localCheckpoint blocks before the next run allocates its
+        # own — at the sf10 tier three runs' worth of retained
+        # checkpoint RDDs OOM'd a 16g driver (each run of a
         # checkpoint-heavy graph op pins several GB until Python GC
         # drops the DataFrame reference)
-        del df
         gc.collect()
         # py4j-only accessor: absent under Spark Connect, and the JVM
         # may ignore the hint — degrade to Python-side gc (the
@@ -88,7 +86,7 @@ def main() -> None:
                 jvm.System.gc()
             except Exception:
                 pass
-        return dt
+        return run
 
     def recycle_session():
         # per-op context restart: releases every retained block
@@ -103,10 +101,14 @@ def main() -> None:
 
     def measure(name: str, sf_dir: str) -> dict:
         run_once(name, sf_dir)  # warm (plan cache, file listing, JIT)
-        ts = sorted(run_once(name, sf_dir) for _ in range(a.runs))
+        runs = [run_once(name, sf_dir) for _ in range(a.runs)]
+        ts = sorted(r.e2e_s for r in runs)
         return {
             "min": round(ts[0], 4),
             "median": round(ts[len(ts) // 2], 4),
+            # the write-only min that SCALING artifacts before the
+            # switch to end-to-end recorded as "min"
+            "execute_min": round(min(r.execute_s for r in runs), 4),
         }
 
     out: dict[str, dict] = {}
