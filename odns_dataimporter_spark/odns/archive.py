@@ -13,41 +13,23 @@ consumed.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from odns_dataimporter_spark.odns.ingest import TS_FORMAT, scan_csv_gz
-from odns_dataimporter_spark.odns.schema import COLUMNS_BY_PROTOCOL, SINK_COLUMNS
+from odns_dataimporter_spark.odns.files import file_scan_date
+from odns_dataimporter_spark.odns.ingest import scan_csv_gz, typed_projection
 
 
 def scan_archive(spark: SparkSession, archive_root: str, protocols=("tcp", "udp")) -> DataFrame:
     """Read every scan file of every year for the given protocols, with
     per-file ``protocol``/``scan_date`` derived from the path (the
     file-level analog of Hive partition columns)."""
-    parts: list[DataFrame] = []
-    for proto in protocols:
-        raw = scan_csv_gz(spark, f"{archive_root}/*/{proto}/*.csv.gz", proto)
-        present = {name for name, _ in COLUMNS_BY_PROTOCOL[proto]}
-        cols: list = []
-        for name in SINK_COLUMNS:
-            if name == "protocol":
-                cols.append(F.lit(proto).alias(name))
-            elif name == "scan_date":
-                cols.append(
-                    F.regexp_extract(
-                        F.element_at(F.split(F.input_file_name(), "/"), -1),
-                        r"\d{4}-\d{2}-\d{2}",
-                        0,
-                    ).alias(name)
-                )
-            elif name not in present:
-                cols.append(F.lit(None).cast("timestamp").alias(name))
-            elif name.startswith("timestamp_"):
-                cols.append(F.try_to_timestamp(F.col(name), F.lit(TS_FORMAT)).alias(name))
-            elif name.startswith("asn_"):
-                cols.append(F.expr(f"try_cast({name} AS DOUBLE)").alias(name))
-            else:
-                cols.append(F.col(name))
-        parts.append(raw.select(*cols))
+    parts = [
+        typed_projection(
+            scan_csv_gz(spark, f"{archive_root}/*/{proto}/*.csv.gz", proto),
+            proto,
+            file_scan_date(),
+        )
+        for proto in protocols
+    ]
     out = parts[0]
     for df in parts[1:]:
         out = out.unionByName(df)

@@ -4,8 +4,9 @@ source_partition_path, derive_scan_date).
 Driver-side path logic mirroring the reference's behavior
 (zipFileUtils.py:7-35, dataimporter.py:109-115): a year/protocol
 partitioned archive, newest-mtime file wins, scan date regex-extracted
-from the basename. Spark never needs the temp-gunzip step — the CSV
-reader decompresses ``.csv.gz`` natively.
+from the basename (per file here, per row in :func:`file_scan_date`).
+Spark never needs the temp-gunzip step — the CSV reader decompresses
+``.csv.gz`` natively.
 """
 
 from __future__ import annotations
@@ -14,6 +15,9 @@ import datetime as _dt
 import glob
 import os
 import re
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 _DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
 
@@ -39,6 +43,15 @@ def extract_file_date_from_name(path: str) -> str | None:
     None when the name carries no date."""
     m = _DATE_RE.search(os.path.basename(path))
     return m.group(0) if m else None
+
+
+def file_scan_date() -> Column:
+    """Per-row twin of :func:`extract_file_date_from_name`: the first
+    ``YYYY-MM-DD`` in the basename of the row's source file, NULL when
+    the name carries no date. For reads that span many scan files."""
+    basename = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    date = F.regexp_extract(basename, _DATE_RE.pattern, 0)
+    return F.when(date != "", date)
 
 
 def list_archive_files_distributed(spark, archive_root: str):

@@ -18,7 +18,7 @@ do not replicate), no row loop, no mutable shared column lists
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odns_dataimporter_spark.odns.schema import COLUMNS_BY_PROTOCOL, SINK_COLUMNS, raw_csv_schema
@@ -28,30 +28,33 @@ from odns_dataimporter_spark.odns.schema import COLUMNS_BY_PROTOCOL, SINK_COLUMN
 # acceptance, and both reject a missing fraction entirely.
 TS_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
+# Reader options for a ``;``-delimited headered scan CSV, batch and
+# streaming alike. Empty fields arrive as NULL (reference
+# dataimporter.py:152-155).
+CSV_OPTIONS = {"sep": ";", "header": True, "nullValue": "", "mode": "PERMISSIVE"}
+
 
 def scan_csv_gz(spark: SparkSession, path: str, protocol: str) -> DataFrame:
-    """Read a ``;``-delimited headered scan CSV (optionally .gz) as raw
-    strings. Spark decompresses gzip natively — no temp file. Empty
-    fields arrive as NULL (reference dataimporter.py:152-155)."""
-    return (
-        spark.read.schema(raw_csv_schema(protocol))
-        .options(sep=";", header=True, nullValue="", mode="PERMISSIVE")
-        .csv(path)
-    )
+    """Read a scan CSV (optionally .gz) as raw strings. Spark
+    decompresses gzip natively — no temp file."""
+    return spark.read.schema(raw_csv_schema(protocol)).options(**CSV_OPTIONS).csv(path)
 
 
-def typed_projection(df: DataFrame, protocol: str, scan_date: str | None) -> DataFrame:
+def typed_projection(df: DataFrame, protocol: str, scan_date: str | Column | None) -> DataFrame:
     """Apply the reference's typer semantics (fieldtypers.py:25-31) and
     derived columns as Catalyst expressions, emitting the 20-column sink
     layout (protocol + 18 TCP columns + scan_date; UDP's missing
-    timestamp_response stays NULL)."""
+    timestamp_response stays NULL). ``scan_date`` is one date for the
+    whole frame, or a per-row Column such as ``files.file_scan_date()``."""
+    if not isinstance(scan_date, Column):
+        scan_date = F.lit(scan_date).cast("string")
     present = {name for name, _ in COLUMNS_BY_PROTOCOL[protocol]}
     cols: list = []
     for name in SINK_COLUMNS:
         if name == "protocol":
             cols.append(F.lit(protocol).alias("protocol"))
         elif name == "scan_date":
-            cols.append(F.lit(scan_date).cast("string").alias("scan_date"))
+            cols.append(scan_date.alias("scan_date"))
         elif name not in present:
             cols.append(F.lit(None).cast("timestamp").alias(name))
         elif name.startswith("timestamp_"):
@@ -86,8 +89,14 @@ def stage_decompress(path: str, stage_dir: str) -> str:
     staged = os.path.join(stage_dir, base[:-3] if base.endswith(".gz") else base)
     if not os.path.exists(staged):
         tmp = staged + ".tmp"
-        with gzip.open(path, "rb") as src, open(tmp, "wb") as dst:
-            shutil.copyfileobj(src, dst, length=1 << 20)
+        try:
+            with gzip.open(path, "rb") as src, open(tmp, "wb") as dst:
+                shutil.copyfileobj(src, dst, length=1 << 20)
+        except BaseException:
+            # a truncated or corrupt archive leaves no partial CSV behind
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         os.replace(tmp, staged)
     return staged
 

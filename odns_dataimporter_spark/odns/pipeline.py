@@ -65,7 +65,13 @@ def run_ingest(
         )
         obs = Observation(f"ingest_{proto}")
         write_snapshot_partitioned(df.observe(obs, F.count(F.lit(1)).alias("rows")), sink_path)
-        results.append(IngestResult(proto, path, scan_date, int(obs.get["rows"])))
+        rows = int(obs.get["rows"])
+        if rows == 0:
+            # dynamic overwrite replaces only partitions that got rows; the
+            # reference deletes the protocol's rows before it inserts
+            # (dataimporter.py:187-200), so an empty scan empties the snapshot
+            df.drop("protocol").write.mode("overwrite").parquet(f"{sink_path}/protocol={proto}")
+        results.append(IngestResult(proto, path, scan_date, rows))
         if move_processed_to is not None:
             shutil.move(path, move_processed_to)
     return results

@@ -55,8 +55,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # planning-time file pruning for the Python DataSource (odns/pyds.py)
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # static, JVM-wide LRU of Janino-compiled classes, keyed by the
         # generated source. One pass of the nine perfbench llm_graph

@@ -301,18 +301,12 @@ def stream_odns_archive_ingest(
     generalization of the reference's single-file date extraction,
     zipFileUtils.py:25-35) — one streaming job handles the whole
     archive history, not just the latest file."""
-    from odns_dataimporter_spark.odns.ingest import typed_projection
+    from odns_dataimporter_spark.odns.files import file_scan_date
+    from odns_dataimporter_spark.odns.ingest import CSV_OPTIONS, typed_projection
     from odns_dataimporter_spark.odns.schema import raw_csv_schema
 
-    raw = (
-        spark.readStream.schema(raw_csv_schema(protocol))
-        .options(sep=";", header=True, nullValue="")
-        .csv(archive_dir)
-    )
-    date = F.regexp_extract(F.input_file_name(), r"\d{4}-\d{2}-\d{2}", 0)
-    typed = typed_projection(raw, protocol, None).withColumn(
-        "scan_date", F.when(date != "", date)  # no date in name -> NULL
-    )
+    raw = spark.readStream.schema(raw_csv_schema(protocol)).options(**CSV_OPTIONS).csv(archive_dir)
+    typed = typed_projection(raw, protocol, file_scan_date())
     q = (
         typed.writeStream.format("parquet")
         .option("path", out_dir)

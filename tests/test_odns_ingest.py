@@ -4,12 +4,16 @@
 from __future__ import annotations
 
 import datetime as dt
+import gzip
 import os
 import shutil
 import time
+from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
+from odns_dataimporter_spark.odns.archive import scan_archive
 from odns_dataimporter_spark.odns.files import (
     extract_file_date_from_name,
     get_data_path,
@@ -22,6 +26,26 @@ from odns_dataimporter_spark.odns.sinks import delete_by_protocol_sql, write_sna
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "odns")
 TCP_FILE = os.path.join(FIXTURES, "2026", "tcp", "tcp_dns_scan_2026-01-15.csv.gz")
 UDP_FILE = os.path.join(FIXTURES, "2026", "udp", "udp_dns_scan_2026-01-16.csv.gz")
+
+
+def _archive(root, *files: tuple[str, bytes]) -> str:
+    """Lay out ``<root>/2026/<proto>/<name>`` for (name, content) pairs,
+    each later file with a newer mtime, so run_ingest picks the last one."""
+    now = time.time()
+    for i, (name, content) in enumerate(files):
+        path = os.path.join(str(root), "2026", name.split("_", 1)[0], name)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as fh:
+            fh.write(content)
+        os.utime(path, (now - 1000 + i, now - 1000 + i))
+    return str(root)
+
+
+def _sink_rows(spark, sink: str) -> dict[str, list[tuple]]:
+    out: dict[str, list[tuple]] = {}
+    for r in spark.read.parquet(sink).collect():
+        out.setdefault(r.protocol, []).append(tuple(str(v) for v in r))
+    return {k: sorted(v) for k, v in out.items()}
 
 
 def test_path_resolution():
@@ -157,3 +181,82 @@ def test_stage_decompress_equals_native_gz_read(spark, tmp_path):
         spark, TCP_FILE, "tcp", "2026-01-15", stage_dir=str(tmp_path / "stage")
     )
     assert staged2.count() == native.count()
+
+
+def test_archive_scan_equals_batch_ingest(spark):
+    """The whole-archive scan types every row exactly as the per-file
+    batch ingest does, with scan_date taken from each file's name."""
+    got = scan_archive(spark, FIXTURES)
+    want = ingest_file(spark, TCP_FILE, "tcp", "2026-01-15").unionByName(
+        ingest_file(spark, UDP_FILE, "udp", "2026-01-16")
+    )
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        map(tuple, want.collect()), key=str
+    )
+
+
+def test_undated_file_name_gives_null_scan_date(spark, tmp_path):
+    """A scan file whose name has no date gets a NULL scan_date, as
+    extract_file_date_from_name gives None, from both the archive scan and
+    the streaming ingest. The date in the directory name is not the file's."""
+    from odns_dataimporter_spark.streaming.jobs import stream_odns_archive_ingest
+
+    name = "tcp_dns_scan_latest.csv.gz"
+    assert extract_file_date_from_name(name) is None
+    root = _archive(tmp_path / "copy_2026-03-01", (name, Path(TCP_FILE).read_bytes()))
+
+    archived = scan_archive(spark, root, protocols=("tcp",))
+    assert [r.scan_date for r in archived.collect()] == [None] * 5
+
+    streamed = stream_odns_archive_ingest(
+        spark, os.path.join(root, "2026", "tcp"), "tcp", str(tmp_path / "snapshot")
+    )
+    assert [r.scan_date for r in streamed.collect()] == [None] * 5
+
+
+def test_header_only_scan_empties_protocol_snapshot(spark, tmp_path):
+    """A newest scan file with a header and no rows leaves the protocol
+    with 0 rows, as the reference's delete-then-insert does; the other
+    protocol's snapshot is untouched."""
+    sink = str(tmp_path / "sink")
+    root = _archive(
+        tmp_path / "archive",
+        ("tcp_dns_scan_2026-01-15.csv.gz", Path(TCP_FILE).read_bytes()),
+        ("udp_dns_scan_2026-01-16.csv.gz", Path(UDP_FILE).read_bytes()),
+    )
+    run_ingest(spark, root, sink, year=2026)
+    before = _sink_rows(spark, sink)
+    assert {k: len(v) for k, v in before.items()} == {"tcp": 5, "udp": 2}
+
+    header = gzip.decompress(Path(TCP_FILE).read_bytes()).split(b"\n", 1)[0] + b"\n"
+    _archive(root, ("tcp_dns_scan_2026-02-01.csv.gz", gzip.compress(header)))
+    (res,) = run_ingest(spark, root, sink, year=2026, protocols=("tcp",))
+    assert (res.rows, res.scan_date) == (0, "2026-02-01")
+
+    after = _sink_rows(spark, sink)
+    assert "tcp" not in after
+    assert after["udp"] == before["udp"]
+
+
+@pytest.mark.parametrize("staged", [False, True], ids=["native_gz", "stage_dir"])
+def test_truncated_gz_keeps_prior_snapshot(spark, tmp_path, staged):
+    """Fault matrix, truncated .gz: the ingest fails as a whole and the
+    prior tcp snapshot stays in place; staging leaves no partial file."""
+    sink = str(tmp_path / "sink")
+    stage_dir = str(tmp_path / "stage") if staged else None
+    tcp = Path(TCP_FILE).read_bytes()
+    root = _archive(tmp_path / "archive", ("tcp_dns_scan_2026-01-15.csv.gz", tcp))
+    run_ingest(spark, root, sink, year=2026, protocols=("tcp",), stage_dir=stage_dir)
+    before = _sink_rows(spark, sink)
+    assert len(before["tcp"]) == 5
+
+    _archive(root, ("tcp_dns_scan_2026-02-01.csv.gz", tcp[: len(tcp) // 2]))
+    with pytest.raises(EOFError if staged else Py4JJavaError):
+        run_ingest(spark, root, sink, year=2026, protocols=("tcp",), stage_dir=stage_dir)
+
+    assert _sink_rows(spark, sink) == before
+    if staged:
+        assert sorted(os.listdir(stage_dir)) == ["tcp_dns_scan_2026-01-15.csv"]
