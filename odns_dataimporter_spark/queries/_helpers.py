@@ -1,5 +1,6 @@
 """Shared helpers for oracle-matched queries: exact money sums,
-timestamp rendering, distributed ranks and the text substrate.
+timestamp rendering, distributed ranks, and the text and graph
+substrates.
 
 Floating-point sums are order-dependent, and Spark's partial-aggregate
 tree differs from DuckDB's, so ``SUM(double)`` can disagree in the last
@@ -13,8 +14,9 @@ engines. This also holds at 100 TB: the int64 sums stay exact up to
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def money_sum(col: Column | str, scale: int = 100) -> Column:
@@ -66,6 +68,41 @@ def gram_hash_sql(k: int) -> str:
     )
 
 
+# Graph substrate (ARCHITECTURE.md "Graph substrate"). Parts u < v are
+# co-ordered iff some order holds both; an event type transitions to
+# the next one the same user fires, in (ts, event_id) order. No helper
+# checkpoints: each caller keeps its own checkpoint and storage level.
+
+
+def basket_pairs(baskets: DataFrame) -> DataFrame:
+    """The ordered (u, v), u < v, pairs inside each `ps` array, one row
+    per pair per basket (duplicates across baskets kept)."""
+    return baskets.select(F.explode("ps").alias("u"), "ps").select(
+        "u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v")
+    )
+
+
+def co_order_edges(lineitem: DataFrame) -> DataFrame:
+    """The distinct (u, v), u < v, edge list of the co-order parts
+    graph: one lineitem shuffle, then pairs expanded per order."""
+    baskets = (
+        lineitem.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .groupBy("ok")
+        .agg(F.collect_set("pk").alias("ps"))
+    )
+    return basket_pairs(baskets).distinct()
+
+
+def event_transitions(events: DataFrame) -> DataFrame:
+    """The non-null (src, dst) event-type transitions of every user,
+    one row per consecutive pair of that user's events."""
+    win = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return events.select(
+        F.lag("event_type").over(win).alias("src"),
+        F.col("event_type").alias("dst"),
+    ).filter(F.col("src").isNotNull())
+
+
 def scalable_row_number(df, order_cols: list[str], out: str = "r"):
     """Global row_number() over `order_cols` WITHOUT a single-task sort
     (round-10 VERDICT item 5 — the distributed-rank pattern).
@@ -89,13 +126,11 @@ def scalable_row_number(df, order_cols: list[str], out: str = "r"):
     Row_number ties: same as the global form — `order_cols` should be
     a total order (callers here always include a unique id column).
     """
-    from pyspark.sql.window import Window as W
-
     d = df.repartitionByRange(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
     local = d.withColumn(
-        "_lr", F.row_number().over(W.partitionBy("_pid").orderBy(*order_cols))
+        "_lr", F.row_number().over(Window.partitionBy("_pid").orderBy(*order_cols))
     )
     offs = (
         local.groupBy("_pid")
@@ -104,7 +139,7 @@ def scalable_row_number(df, order_cols: list[str], out: str = "r"):
             "_pid",
             F.coalesce(
                 F.sum("_c").over(
-                    W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ).alias("_off"),
@@ -147,8 +182,6 @@ def scalable_prefix_sum(df, order_cols: list[str], val_col: str, out: str = "cum
     single-task window is pinned in tests/test_round11_invariants.py).
     ``order_cols`` must be a total order of the rows (callers pass the
     distinct histogram key)."""
-    from pyspark.sql.window import Window as W
-
     d = df.repartitionByRange(*order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -156,9 +189,9 @@ def scalable_prefix_sum(df, order_cols: list[str], val_col: str, out: str = "cum
         "_lc",
         F.coalesce(
             F.sum(val_col).over(
-                W.partitionBy("_pid")
+                Window.partitionBy("_pid")
                 .orderBy(*order_cols)
-                .rowsBetween(W.unboundedPreceding, -1)
+                .rowsBetween(Window.unboundedPreceding, -1)
             ),
             F.lit(0),
         ),
@@ -170,7 +203,7 @@ def scalable_prefix_sum(df, order_cols: list[str], val_col: str, out: str = "cum
             "_pid",
             F.coalesce(
                 F.sum("_t").over(
-                    W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+                    Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ).alias("_off"),

@@ -1,20 +1,21 @@
 """Graph analytics over derived relational graphs.
 
-The event-type transition graph (nodes = event types, weighted edges =
-observed user transitions, the same derivation as `events_markov`)
-carries a fully oracle-checked weighted PageRank: the iteration is
+Most queries here read one of two graphs from the graph substrate in
+`queries/_helpers.py` (ARCHITECTURE.md "Graph substrate"): the co-order
+parts graph (`co_order_edges`) or the event-type transition graph
+(`event_transitions`, also read by `events_markov`). PageRank and HITS
+on the transition graph are fully oracle-checked: the iteration is
 unrolled to a fixed depth so DuckDB can replay it exactly, and every
 floating sum is an ordered fold (sorted contribution lists), keeping
-the scores bit-identical across engines. Complements
-`dedup_cluster_components` (iterative min-label propagation) as the
-second graph algorithm in the engine.
+the scores bit-identical across engines.
 
 Scale note: after the single big shuffle (the transition count over
-events), the graph itself is |event types|² cells — all subsequent
-joins are tiny-table math. For a billion-node graph the same unrolled
-dataflow holds (join-aggregate per iteration, localCheckpoint between
-rounds, exactly what `dedup_cluster_components` does); only the
-ordered-fold determinism trick would yield to a plain SUM.
+events), the transition graph itself is |event types|² cells — all
+subsequent joins are tiny-table math. For a billion-node graph the
+same unrolled dataflow holds (join-aggregate per iteration,
+localCheckpoint between rounds, exactly what
+`dedup_cluster_components` does); only the ordered-fold determinism
+trick would yield to a plain SUM.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
+from odns_dataimporter_spark.queries._helpers import co_order_edges, event_transitions
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -81,12 +83,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition count); every iteration afterwards joins tables of
     |event types| rows."""
     ev = load_table(spark, sf_dir, "events")
-    win = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.lag("event_type").over(win).alias("src"),
-        F.col("event_type").alias("dst"),
-    ).filter(F.col("src").isNotNull())
-    e = seq.groupBy("src", "dst").agg(F.count("*").cast("long").alias("n"))
+    e = event_transitions(ev).groupBy("src", "dst").agg(
+        F.count("*").cast("long").alias("n")
+    )
     # The graph is bounded at |event types|² cells BY CONSTRUCTION, so
     # after the one events-scale shuffle it is broadcast-sized. Gather
     # it into a single row (two 1-row aggregates — still executor-side,
@@ -262,22 +261,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimization doesn't change semantics. Shuffles: edge distinct,
     degree agg, rank window, two wedge-closing equi joins — all keyed,
     no cartesian."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    # one-shuffle pair derivation (the graph_label_propagation shape),
+    li = load_table(spark, sf_dir, "lineitem")
     # CHECKPOINTED: edges feed the degree aggregate, the rank joins,
     # and (transitively) both wedge sides — without the checkpoint this
     # plan re-derived the lineitem scan 36 times (scan-count audit,
     # round 5); with it, once
-    edges = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = co_order_edges(li).localCheckpoint(eager=False)
     deg = (
         edges.select(F.col("u").alias("x"))
         .unionAll(edges.select(F.col("v").alias("x")))
@@ -386,29 +375,19 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     run at item-catalog scale.
 
     Scale shape: wedge enumeration is inherently Σ_c deg(c)² over
-    common-neighbor hubs c, so hubs with degree > {_LP_HUB_CAP} are
-    DROPPED from the wedge side (the standard stop-node rule: a part
-    in half the orders predicts nothing — same reason similarity
-    mining drops stopwords — and the cap bounds every c's fan-out at
-    {_LP_HUB_CAP}²; the hub nodes still contribute to the degree
-    denominators). Existing edges are removed by a LEFT ANTI join on
-    the pair key; the top-{_LP_TOPN} cut is a TakeOrderedAndProject,
-    never a global sort. Determinism: counts/degrees are integers,
-    ties order by (u, v); Jaccard is one terminal division, floored at
-    1e-9."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    # one-shuffle pair derivation + checkpoint (see graph_triangle_count
-    # — this plan re-derived the lineitem scan 26 times before)
-    edges = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    common-neighbor hubs c, so hubs with degree > 64 are DROPPED from
+    the wedge side (the standard stop-node rule: a part in half the
+    orders predicts nothing — same reason similarity mining drops
+    stopwords — and the cap bounds every c's fan-out at 64²; the hub
+    nodes still contribute to the degree denominators). Existing edges
+    are removed by a LEFT ANTI join on the pair key; the top-20 cut is
+    a TakeOrderedAndProject, never a global sort. Determinism:
+    counts/degrees are integers, ties order by (u, v); Jaccard is one
+    terminal division, floored at 1e-9."""
+    li = load_table(spark, sf_dir, "lineitem")
+    # checkpointed (see graph_triangle_count — this plan re-derived the
+    # lineitem scan 26 times before)
+    edges = co_order_edges(li).localCheckpoint(eager=False)
     adj = edges.select(F.col("u").alias("c"), F.col("v").alias("x")).unionAll(
         edges.select(F.col("v").alias("c"), F.col("u").alias("x"))
     )
@@ -490,20 +469,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge distinct, degree aggregate, two node-keyed degree joins — all
     equi-keyed; degrees join the edge list, never materializing
     anything bigger than |edges|."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    # one-shuffle pair derivation + checkpoint (see graph_triangle_count
-    # — 12 redundant lineitem scans before); the |parts|-row degree
-    # table broadcasts into both endpoint joins
-    pairs = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    # checkpointed (see graph_triangle_count — 12 redundant lineitem
+    # scans before); the |parts|-row degree table broadcasts into both
+    # endpoint joins
+    pairs = co_order_edges(li).localCheckpoint(eager=False)
     bi = pairs.unionAll(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = bi.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("d")
@@ -584,6 +554,39 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LPA_ROUNDS = 2
 
 
+def _lpa_labels(bi: DataFrame) -> DataFrame:
+    """(node, lbl) after `_LPA_ROUNDS` synchronous rounds over the
+    symmetric (src, dst) edge list `bi`, from identity labels: each
+    node takes the mode of its neighbors' labels, ties to the smallest
+    label. The oracle's rounds are `_lpa_round_sql`."""
+    # round 1 (identity labels): mode-of-neighbor-labels = min neighbor
+    nl = bi.groupBy(F.col("dst").alias("node")).agg(F.min("src").alias("lbl"))
+    for _ in range(_LPA_ROUNDS - 1):
+        # the label table is |nodes|-sized (≪ |edges| — here |parts|),
+        # so broadcast it: the 2.4M-row edge side never re-shuffles for
+        # the join. For a graph whose node set outgrows the broadcast
+        # threshold, drop the hint and let AQE pick the shuffle join.
+        counts = (
+            bi.join(F.broadcast(nl.withColumnRenamed("node", "src")), "src")
+            .groupBy(F.col("dst").alias("node"), "lbl")
+            .agg(F.count("*").alias("c"))
+        )
+        # argmax(count, tie -> min label) as a map-side-combined
+        # min-struct aggregate: same result as the row_number window,
+        # without the per-node sort (2 rounds x 1.2M-edge counts made
+        # the window the bench hotspot: 3.7s -> see PERFORMANCE.md)
+        nl = (
+            counts.groupBy("node")
+            .agg(
+                F.min(
+                    F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("l"))
+                ).alias("m")
+            )
+            .select("node", F.col("m.l").alias("lbl"))
+        )
+    return nl
+
+
 def _lpa_round_sql(r: int) -> str:
     return f"""
 nl{r + 1} AS (
@@ -622,31 +625,23 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the reason vanilla LPA can't be oracle-checked), 2 unrolled
     rounds from identity labels, reported as community → size.
 
-    Per round: one neighbor join keyed on src, one (node, label)
-    count aggregate, one per-node min-struct argmax — all equi-keyed;
-    the whole chain is lazy, no driver iteration state. Two
-    result-preserving specializations vs the oracle's general
-    formulation: (1) edges come from ONE lineitem shuffle
-    (collect_set per order, ordered pairs expanded executor-side over
-    ~4-element arrays) instead of a two-scan self-join; (2) round 1
-    from IDENTITY labels degenerates to min(neighbor) — every
-    (dst, lbl) count is exactly 1 over a distinct symmetric edge set,
-    so argmax-with-min-tiebreak IS the min — and the coalesce joins
-    drop because the node set is by construction the dst set of bi.
-    At 100 TB rounds run to label-change convergence with
-    localCheckpoint per round (the dedup_cluster_components
-    discipline); the synchronous mode update is exactly GraphFrames'
-    LPA formulation."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    e = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-    )
+    Per round (`_lpa_labels`): one neighbor join keyed on src, one
+    (node, label) count aggregate, one per-node min-struct argmax — all
+    equi-keyed, no driver iteration state. Two result-preserving
+    specializations vs the oracle's general formulation: (1) edges
+    come from ONE lineitem shuffle (`co_order_edges`: collect_set per
+    order, ordered pairs expanded executor-side over ~4-element arrays)
+    instead of a two-scan self-join; (2) round 1 from IDENTITY labels
+    degenerates to min(neighbor) — every (dst, lbl) count is exactly 1
+    over a distinct symmetric edge set, so argmax-with-min-tiebreak IS
+    the min — and the coalesce joins drop because the node set is by
+    construction the dst set of bi. The round count is fixed at
+    `_LPA_ROUNDS` = 2 on both engines, with no convergence check; only
+    the edge list is checkpointed, no round is. Running to label-change
+    convergence would need a per-round checkpoint (the
+    dedup_cluster_components discipline) and a new oracle. The
+    synchronous mode update is exactly GraphFrames' LPA formulation."""
+    e = co_order_edges(load_table(spark, sf_dir, "lineitem"))
     # materialize the edge list once (localCheckpoint): without it every
     # round's join re-derives the pair expansion through lineage. Under
     # AQE eager=False still runs the shuffle stages below the checkpoint
@@ -656,32 +651,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .localCheckpoint(eager=False)
     )
-    # round 1 (identity labels): mode-of-neighbor-labels = min neighbor
-    nl = bi.groupBy(F.col("dst").alias("node")).agg(F.min("src").alias("lbl"))
-    for _ in range(_LPA_ROUNDS - 1):
-        # the label table is |nodes|-sized (≪ |edges| — here |parts|),
-        # so broadcast it: the 2.4M-row edge side never re-shuffles for
-        # the join. For a graph whose node set outgrows the broadcast
-        # threshold, drop the hint and let AQE pick the shuffle join.
-        counts = (
-            bi.join(F.broadcast(nl.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"), "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        # argmax(count, tie -> min label) as a map-side-combined
-        # min-struct aggregate: same result as the row_number window,
-        # without the per-node sort (2 rounds x 1.2M-edge counts made
-        # the window the bench hotspot: 3.7s -> see PERFORMANCE.md)
-        nl = (
-            counts.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("l"))
-                ).alias("m")
-            )
-            .select("node", F.col("m.l").alias("lbl"))
-        )
-    return nl.groupBy("lbl").agg(
+    return _lpa_labels(bi).groupBy("lbl").agg(
         F.count("*").cast("long").alias("n_members"),
         F.min("node").cast("long").alias("min_node"),
     ).select(F.col("lbl").cast("long").alias("community"), "n_members", "min_node")
@@ -722,50 +692,39 @@ FROM top WHERE d >= 2 ORDER BY degree DESC, node ASC
     tags=("graph", "stats"),
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient (2·t_v / d_v(d_v−1)) for the
-    top-{_CC_TOPN} hubs of the parts-co-ordered graph — the
-    per-node refinement of `graph_triangle_count`'s global tally, and
-    the standard "is this hub a community or a star" diagnostic. Scale
-    mechanism (r11, VERDICT r10 item 1 — rewritten hub-local): the
-    output needs triangle counts for exactly {_CC_TOPN} nodes, so the
-    whole all-node machinery (degree-rank map, oriented edge list,
-    adjacency arrays, the closing join that OOM'd 16 g/28 g heaps and
-    needed 56 g at the sf10 rehearsal) is REPLACED by computing only
-    what is asked (guide §1.2/§8): (1) hubs = deterministic global
-    top-{_CC_TOPN} of the degree table by (degree, node) —
-    TakeOrderedAndProject, no global window; (2) each hub's
-    neighborhood via two broadcast joins of the 20-row hub table
-    against the edge list; (3) t_hub = |edges inside N(hub)| — the
-    candidate neighbor PAIRS (Σ C(deg_hub, 2), bounded by
-    {_CC_TOPN}·max_deg², ~600k rows at sf1 where max_deg=245 grows
-    ~logarithmically in this co-order graph) broadcast back against
-    the id-ordered edge list in ONE streaming pass — no E-row
-    shuffle, no arrays, nothing quadratic in the corpus. The oracle
-    is unchanged (all-node wedge join + top-N), proving hub-local
-    counting preserves semantics exactly. At the ≥1M-node tier the
-    E-row edge checkpoint stores DISK_ONLY so block storage cannot
+    """Local clustering coefficient (2·t_v / d_v(d_v−1)) for the top-20
+    hubs of the parts-co-ordered graph — the per-node refinement of
+    `graph_triangle_count`'s global tally, and the standard "is this hub
+    a community or a star" diagnostic. Scale mechanism (r11, VERDICT r10
+    item 1 — rewritten hub-local): the output needs triangle counts for
+    exactly 20 nodes, so the whole all-node machinery (degree-rank map,
+    oriented edge list, adjacency arrays, the closing join that OOM'd
+    16 g/28 g heaps and needed 56 g at the sf10 rehearsal) is REPLACED by
+    computing only what is asked (guide §1.2/§8): (1) hubs =
+    deterministic global top-20 of the degree table by (degree, node) —
+    TakeOrderedAndProject, no global window; (2) each hub's neighborhood
+    via two broadcast joins of the 20-row hub table against the edge
+    list; (3) t_hub = |edges inside N(hub)| — the candidate neighbor
+    PAIRS (Σ C(deg_hub, 2), bounded by 20·max_deg², ~600k rows at sf1
+    where max_deg=245 grows ~logarithmically in this co-order graph)
+    broadcast back against the id-ordered edge list in ONE streaming
+    pass — no E-row shuffle, no arrays, nothing quadratic in the corpus.
+    The oracle is unchanged (all-node wedge join + top-N), proving
+    hub-local counting preserves semantics exactly. At the ≥1M-node tier
+    the E-row edge checkpoint stores DISK_ONLY so block storage cannot
     starve execution memory (measured r11: MEMORY_AND_DISK checkpoint
     blocks alone OOM'd a 16 g heap at sf10). Boundary: a
     celebrity-degree graph (max_deg² ≫ E) would inflate the pair set;
-    for THIS op's co-order graph max_deg is sqrt-of-order-size
-    bounded (222 at sf0.1 → 245 at sf1 → 276 at sf10)."""
+    for THIS op's co-order graph max_deg is sqrt-of-order-size bounded
+    (222 at sf0.1 → 245 at sf1 → 276 at sf10)."""
     from odns_dataimporter_spark.size_hints import derived_rank_distributed
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
     big = derived_rank_distributed(sf_dir)
     ckpt_lvl = StorageLevel.DISK_ONLY if big else None
-    edges = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        # feeds the degree aggregate, both neighborhood joins and the
-        # closing scan (4 consumers)
-        .localCheckpoint(eager=False, storageLevel=ckpt_lvl)
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    # feeds the degree aggregate, both neighborhood joins and the
+    # closing scan (4 consumers)
+    edges = co_order_edges(li).localCheckpoint(eager=False, storageLevel=ckpt_lvl)
     # both directions of every edge in ONE streamed projection over
     # the checkpoint: feeds the degree aggregate AND the neighborhood
     # join, so the E-row checkpoint is read 4 times per run instead
@@ -877,31 +836,22 @@ ORDER BY round
     tags=("graph", "stats"),
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{_KCORE_K}-core decomposition by iterative peeling over the
-    parts-co-ordered graph — {_KCORE_ROUNDS} FIXED peel rounds (remove
-    every node with degree < {_KCORE_K}, drop incident edges, repeat),
-    reporting surviving node/edge counts per round: the classic
-    community-core extraction that separates durable co-purchase
-    structure from one-off order noise. The round count is bounded BY
-    CONSTRUCTION (the `dedup_cluster_components` lesson: no
-    unconditioned driver-side convergence loop) — each round is one
-    degree aggregate + two semi-joins, all keyed on node id; a full
-    peel at 100 TB runs O(degeneracy) rounds, and the fixed-round
-    variant is the standard bounded-latency approximation whose
-    monotone convergence (counts non-increasing, fixpoint detectable
-    by equal consecutive rows) is pinned by a pytest invariant.
-    Checkpoint per round caps lineage depth."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    edges = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    """3-core decomposition by iterative peeling over the
+    parts-co-ordered graph — 4 FIXED peel rounds (remove every node with
+    degree < 3, drop incident edges, repeat), reporting surviving
+    node/edge counts per round: the classic community-core extraction
+    that separates durable co-purchase structure from one-off order
+    noise. The round count is bounded BY CONSTRUCTION (the
+    `dedup_cluster_components` lesson: no unconditioned driver-side
+    convergence loop) — each round is one degree aggregate + two
+    semi-joins, all keyed on node id; a full peel at 100 TB runs
+    O(degeneracy) rounds, and the fixed-round variant is the standard
+    bounded-latency approximation whose monotone convergence (counts
+    non-increasing, fixpoint detectable by equal consecutive rows) is
+    pinned by a pytest invariant. Checkpoint per round caps lineage
+    depth."""
+    li = load_table(spark, sf_dir, "lineitem")
+    edges = co_order_edges(li).localCheckpoint(eager=False)
     out = []
     for r in range(1, _KCORE_ROUNDS + 1):
         deg = (
@@ -986,39 +936,15 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     with min-label ties), so both engines agree on every community.
     Shape: the LP rounds (keyed joins + min-struct argmax) plus one
     intra-community edge count and one degree-by-label aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    )
-    e = (
-        li.groupBy("ok")
-        .agg(F.collect_set("pk").alias("ps"))
-        .select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # feeds bi, m, and the ec join
-    )
+    li = load_table(spark, sf_dir, "lineitem")
+    # feeds bi, m, and the ec join
+    e = co_order_edges(li).localCheckpoint(eager=False)
     bi = (
         e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .localCheckpoint(eager=False)
     )
-    nl = bi.groupBy(F.col("dst").alias("node")).agg(F.min("src").alias("lbl"))
-    for _ in range(_LPA_ROUNDS - 1):
-        counts = (
-            bi.join(F.broadcast(nl.withColumnRenamed("node", "src")), "src")
-            .groupBy(F.col("dst").alias("node"), "lbl")
-            .agg(F.count("*").alias("c"))
-        )
-        nl = (
-            counts.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("c")).alias("nc"), F.col("lbl").alias("l"))
-                ).alias("m")
-            )
-            .select("node", F.col("m.l").alias("lbl"))
-        )
-    lab = nl.localCheckpoint(eager=False)  # feeds ec AND dc
+    lab = _lpa_labels(bi).localCheckpoint(eager=False)  # feeds ec AND dc
     m = e.agg(F.count("*").cast("long").alias("m"))
     lu = lab.withColumnRenamed("node", "u").withColumnRenamed("lbl", "lu")
     lv = lab.withColumnRenamed("node", "v").withColumnRenamed("lbl", "lv")
@@ -1147,12 +1073,9 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint discipline (graph_bfs_hops / cluster_components
     pin that shape)."""
     ev = load_table(spark, sf_dir, "events")
-    win = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.lag("event_type").over(win).alias("src"),
-        F.col("event_type").alias("dst"),
-    ).filter(F.col("src").isNotNull())
-    e = seq.groupBy("src", "dst").agg(F.count("*").cast("long").alias("n"))
+    e = event_transitions(ev).groupBy("src", "dst").agg(
+        F.count("*").cast("long").alias("n")
+    )
     # (dst, src)-sorted array: filter(dst==v) folds src-ascending;
     # (src, dst)-sorted array: filter(src==u) folds dst-ascending.
     edges_a = e.agg(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from odns_dataimporter_spark.queries._helpers import money_sum, money_sum_sql
+from odns_dataimporter_spark.queries._helpers import basket_pairs, money_sum, money_sum_sql
 from odns_dataimporter_spark.registry import register
 from odns_dataimporter_spark.tables import load_table
 
@@ -569,8 +569,7 @@ def mining_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("c"))
     )
     pp = (
-        baskets.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode(F.filter("ps", lambda v: v > F.col("u"))).alias("v"))
+        basket_pairs(baskets)
         .groupBy("u", "v")
         .agg(F.count("*").cast("long").alias("cuv"))
         .filter(F.col("cuv") >= _AR_MINSUP)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from odns_dataimporter_spark.queries._helpers import (
+    event_transitions,
     money_sum,
     money_sum_sql,
     ts_str,
@@ -300,12 +301,9 @@ def events_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined count to a transition matrix of |types|² cells,
     and the normalizing sum is a window over that tiny matrix."""
     ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.lag("event_type").over(w).alias("src"),
-        F.col("event_type").alias("dst"),
-    ).filter(F.col("src").isNotNull())
-    c = seq.groupBy("src", "dst").agg(F.count("*").cast("long").alias("n_trans"))
+    c = event_transitions(ev).groupBy("src", "dst").agg(
+        F.count("*").cast("long").alias("n_trans")
+    )
     tot = F.sum("n_trans").over(W.partitionBy("src"))
     return c.select(
         "src",

@@ -13,6 +13,7 @@ thing that grows with input.
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 from collections.abc import Iterator
@@ -294,8 +295,15 @@ def stream_odns_archive_ingest(
     snapshot layout — the Structured Streaming replacement for the
     reference's cron-driven newest-file pick (zipFileUtils.py:7-17):
     instead of polling for the most recent archive, the file source
-    discovers each new file exactly once (checkpointed), applies the
-    same typed projection as the batch path, and appends atomically.
+    lists the files it has not yet seen, applies the same typed
+    projection as the batch path, and appends atomically.
+
+    The checkpoint lives in ``<out_dir>/_checkpoint``, next to the
+    sink's ``_spark_metadata`` log, so a later call on the same
+    ``out_dir`` resumes: it lands only the files that arrived since,
+    and a call with no new file adds nothing. A file is landed once per
+    ``out_dir``, by path: one rewritten under a name already seen is
+    not read again.
 
     ``scan_date`` is derived per-file from the filename (the streaming
     generalization of the reference's single-file date extraction,
@@ -310,7 +318,7 @@ def stream_odns_archive_ingest(
     q = (
         typed.writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_odns_"))
+        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .partitionBy("protocol")
         .outputMode("append")
         .trigger(availableNow=True)

@@ -217,6 +217,27 @@ def test_undated_file_name_gives_null_scan_date(spark, tmp_path):
     assert [r.scan_date for r in streamed.collect()] == [None] * 5
 
 
+def test_stream_ingest_resumes_on_the_same_out_dir(spark, tmp_path):
+    """A later call on the same out_dir lands the scan file that arrived
+    since the last call, and a call with no new file lands nothing. The
+    sink's batch log lives in out_dir, so the checkpoint must too: with a
+    fresh checkpoint per call the sink skipped the second call's batch."""
+    from odns_dataimporter_spark.streaming.jobs import stream_odns_archive_ingest
+
+    data = Path(TCP_FILE).read_bytes()
+    root = _archive(tmp_path / "archive", ("tcp_dns_scan_2026-01-15.csv.gz", data))
+    watch, out = os.path.join(root, "2026", "tcp"), str(tmp_path / "snapshot")
+
+    def scan_dates() -> list[str]:
+        rows = stream_odns_archive_ingest(spark, watch, "tcp", out).collect()
+        return sorted(r.scan_date for r in rows)
+
+    assert scan_dates() == ["2026-01-15"] * 5
+    _archive(root, ("tcp_dns_scan_2026-02-01.csv.gz", data))
+    assert scan_dates() == ["2026-01-15"] * 5 + ["2026-02-01"] * 5
+    assert len(scan_dates()) == 10
+
+
 def test_header_only_scan_empties_protocol_snapshot(spark, tmp_path):
     """A newest scan file with a header and no rows leaves the protocol
     with 0 rows, as the reference's delete-then-insert does; the other
