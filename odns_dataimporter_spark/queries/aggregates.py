@@ -471,7 +471,7 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     return (
-        nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation.join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name")
         .agg(
             F.count("*").cast("long").alias("n_nations"),

@@ -912,7 +912,7 @@ def events_template_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").cast("long").alias("total"),
         F.count("*").cast("long").alias("n_templates"),
     )
-    return c.crossJoin(F.broadcast(tot)).select(
+    return c.crossJoin(tot).select(
         "template",
         "n_events",
         (F.floor(F.col("n_events") * 1_000_000.0 / F.col("total")) / 1_000_000.0).alias(
@@ -958,13 +958,13 @@ def etl_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states it as one global window; a single global
     ORDER BY window is a one-task plan, so the Spark side runs the
     distributed two-level scan instead: (1) per-block token sums
-    (block = doc_id div {_SHARD_BLOCK}, one map-side-combined
+    (block = doc_id div 100, one map-side-combined
     aggregate), (2) running block offsets over the |blocks|-row table
     (tiny — broadcast back), (3) intra-block running sums under a
     window PARTITIONED by block. Identical integer results, but every
     stage is parallel and the only global structure is the |blocks|
     table — the same shape prefix sums take on any shared-nothing
-    engine. At 100 TB the block table is ~rows/{_SHARD_BLOCK} and the
+    engine. At 100 TB the block table is ~rows/100 and the
     shard summary shuffle is |shards|-sized."""
     from pyspark.sql.window import Window
 
@@ -1231,10 +1231,10 @@ def profile_shuffle_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew profiler — the measurement that decides whether
     a join/aggregation key needs salting BEFORE the job hits the
     straggler: per candidate key (user_id over events), the heavy-
-    hitter top-{_SKEW_TOPK}, max/mean ratio, the L2 skew factor
+    hitter top-5, max/mean ratio, the L2 skew factor
     n·Σc²/(Σc)² (1.0 = perfectly uniform — the expected reducer
     slowdown under hash partitioning), and the salt fan-out
-    ceil(max_key/{_SKEW_TARGET}) that `join_skew_salted` would need.
+    ceil(max_key/200) that `join_skew_salted` would need.
     This is the profiling half of the skew story the engine already
     mitigates (join_skew_salted, agg_skew_salted, AQE notes in
     ARCHITECTURE.md). Scale shape: ONE map-side-combined key count,
@@ -1264,7 +1264,7 @@ def profile_shuffle_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rk") <= _SKEW_TOPK)
     )
-    return t.crossJoin(F.broadcast(s)).select(
+    return t.crossJoin(s).select(
         F.col("rk").alias("heavy_rank"),
         F.col("user_id").alias("key_id"),
         F.col("c").alias("key_rows"),

@@ -179,7 +179,7 @@ def join_returned_items_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", F.col("n_name").alias("nation"))
         .agg((F.sum(rev) / F.lit(1e6)).alias("revenue"))
         .orderBy(F.col("revenue").desc(), "c_custkey")

@@ -221,7 +221,7 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lat_u(F.col("n_nationkey") + 1).alias("hlat"),
         _lon_u(F.col("n_nationkey") + 1).alias("hlon"),
     )
-    d = pts.crossJoin(F.broadcast(hubs)).select(
+    d = pts.crossJoin(hubs).select(
         "c_custkey",
         "n_nationkey",
         (
@@ -325,7 +325,7 @@ def geo_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("w")
     )
-    pts = c.crossJoin(F.broadcast(gov)).select(
+    pts = c.crossJoin(gov).select(
         F.col("c_custkey").alias("k"),
         _lat_u(F.col("c_custkey")).alias("lat_u"),
         _lon_u(F.col("c_custkey")).alias("lon_u"),
@@ -559,7 +559,7 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     are a LOW-DISCREPANCY Weyl sequence with no density clumps at all
     (measured: zero 4°-neighbors at sf0.01), which would make every
     density-based op vacuously all-noise. a point is
-    CORE if ≥ {_DB_MINPTS} points (itself included) sit within
+    CORE if ≥ 4 points (itself included) sit within
     eps = 4° — SUBCRITICAL for the tested densities, the way a
     production run picks eps at the k-distance knee: a supercritical
     eps merges the corpus into one giant cluster whose label
@@ -611,7 +611,7 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("eps"),
     )
-    c = c.crossJoin(F.broadcast(gov))
+    c = c.crossJoin(gov)
     city = F.expr("(c_custkey DIV 37)") % F.col("m") + 1
     clat = F.greatest(
         F.lit(-90_000_000).cast("long"),

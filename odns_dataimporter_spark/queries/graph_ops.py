@@ -320,8 +320,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     nv = deg.agg(F.count("*").cast("long").alias("n_vertices"))
     ne = edges.agg(F.count("*").cast("long").alias("n_edges"))
     return (
-        nv.crossJoin(F.broadcast(ne))
-        .crossJoin(F.broadcast(tri))
+        nv.crossJoin(ne)
+        .crossJoin(tri)
         .select("n_vertices", "n_edges", "n_triangles")
     )
 
@@ -757,7 +757,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when one endpoint is a hub (a hub pair contributes to both
     # neighborhoods via the stacked directions).
     hu = hubs.select(F.col("x").alias("h"))
-    nbr = stacked.join(F.broadcast(hu), stacked.a == hu.h).select(
+    nbr = stacked.join(hu, stacked.a == hu.h).select(
         "h", F.col("b").alias("n")
     )
     # candidate pairs inside each neighborhood, id-ordered to match
@@ -871,11 +871,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.append(
             keep.agg(F.count("*").cast("long").alias("n_nodes"))
-            .crossJoin(
-                F.broadcast(
-                    edges.agg(F.count("*").cast("long").alias("n_edges"))
-                )
-            )
+            .crossJoin(edges.agg(F.count("*").cast("long").alias("n_edges")))
             .select(
                 F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges"
             )
@@ -962,7 +958,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = (
         dc.join(ec, "lbl", "left")
-        .crossJoin(F.broadcast(m))
+        .crossJoin(m)
         .select(
             (
                 4 * F.col("m") * F.coalesce("e_c", F.lit(0))
@@ -976,7 +972,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = terms.agg(F.sum("num").cast("long").alias("q_num"))
     return (
         ncom.crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(agg))
+        .crossJoin(agg)
         .select(
             "n_communities",
             F.col("m").alias("n_edges"),

@@ -159,7 +159,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     anchor = ev.agg(F.max(day).alias("anchor_day"))
     u = (
-        u.crossJoin(F.broadcast(anchor))
+        u.crossJoin(anchor)
         .select(
             "user_id",
             F.datediff("anchor_day", "last_day").cast("long").alias("recency_days"),
@@ -180,7 +180,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         for q in (0.25, 0.50, 0.75)
     }
     q = u.agg(*[e.alias(k) for k, e in qexpr.items()])
-    s = u.crossJoin(F.broadcast(q))
+    s = u.crossJoin(q)
     r_score = (
         F.when(F.col("recency_days") <= F.col("r25"), 4)
         .when(F.col("recency_days") <= F.col("r50"), 3)
@@ -400,7 +400,7 @@ def events_ab_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("nc"),
     )
     diff2 = ((F.col("nt") - F.col("nc")) * (F.col("nt") - F.col("nc"))).cast("double")
-    return arm.crossJoin(F.broadcast(srm)).select(
+    return arm.crossJoin(srm).select(
         "variant",
         "n_users",
         "n_converted",
@@ -536,7 +536,7 @@ WHERE rn <= {_AR_TOPN}
     tags=("analytics", "events", "profiling"),
 )
 def mining_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{N} association rules u→v over order baskets by lift, with
+    """Top-20 association rules u→v over order baskets by lift, with
     exact support and confidence — the Apriori pair layer as pure
     relational algebra: distinct (order, part) once, item counts and
     the basket total as side aggregates, pair counts from the
@@ -577,7 +577,7 @@ def mining_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (
         pp.join(F.broadcast(ic.select(F.col("pk").alias("u"), F.col("c").alias("cu"))), "u")
         .join(F.broadcast(ic.select(F.col("pk").alias("v"), F.col("c").alias("cv"))), "v")
-        .crossJoin(F.broadcast(nb))
+        .crossJoin(nb)
     )
     lift_int = F.floor(
         F.col("n") * F.col("cuv") * 1_000_000.0 / (F.col("cu") * F.col("cv"))
@@ -673,7 +673,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     day_us = 86_400_000_000
     u = (
         s.join(p, "user_id", "left")
-        .crossJoin(F.broadcast(mx))
+        .crossJoin(mx)
         .select(
             F.when(converted, 1).otherwise(0).alias("ev"),
             F.when(
@@ -759,7 +759,7 @@ def events_sankey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(" > ", "e1", "e2", "e3").alias("path")
     ).groupBy("path").agg(F.count("*").cast("long").alias("n_paths"))
     tot = c.agg(F.sum("n_paths").cast("long").alias("total"))
-    return c.crossJoin(F.broadcast(tot)).select(
+    return c.crossJoin(tot).select(
         "path",
         "n_paths",
         (F.floor(F.col("n_paths") * 1_000_000.0 / F.col("total")) / 1_000_000.0).alias(
@@ -889,7 +889,7 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean_y = F.col("syv").cast("double") / F.col("n_users")
     mean_x_v = F.col("sxv").cast("double") / F.col("n_users")
     mean_x = F.col("sx").cast("double") / F.col("n")
-    return v.crossJoin(F.broadcast(th)).select(
+    return v.crossJoin(th).select(
         "arm",
         "n_users",
         (F.floor(mean_y * 10_000.0) / 1_000_000.0).alias("mean_post_q6"),
@@ -1433,7 +1433,7 @@ def events_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tau2 = _MSPRT_TAU_MILLI * _MSPRT_TAU_MILLI
     x = (
-        c.crossJoin(F.broadcast(sig))
+        c.crossJoin(sig)
         .filter((F.col("n_t") > 0) & (F.col("n_c") > 0))
         .select(
             "day",
@@ -1874,7 +1874,7 @@ WHERE n1 > 0 AND n2 > 0 AND total_days > {_PRT_SPLIT_DAYS}
 )
 def events_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-period Poisson rate comparison per event type — "did the
-    event rate CHANGE between the first {_PRT_SPLIT_DAYS} days and the
+    event rate CHANGE between the first 15 days and the
     rest?", the count-data companion to `stats_welch_ttest` (means) and
     `events_ab_assignment_srm` (allocation): under H₀ the period-1
     count is Binomial(n₁+n₂, t₁/T) conditional on the total (the exact
@@ -1889,7 +1889,7 @@ def events_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.col("ts").cast("date")).alias("lo"),
         F.max(F.col("ts").cast("date")).alias("hi"),
     )
-    e = ev.crossJoin(F.broadcast(b))
+    e = ev.crossJoin(b)
     c = e.groupBy("event_type").agg(
         F.sum(
             F.when(
@@ -1979,7 +1979,7 @@ def events_bass_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bass diffusion-model fit to the user-adoption curve — the
     classic innovation/imitation growth decomposition (Bass 1969):
     daily new adopters d̂ₜ = (p + q·Aₜ₋₁/M)(M − Aₜ₋₁), fit by exact grid
-    search over {_BASS_P_GRID}×{_BASS_Q_GRID} (p, q) combinations
+    search over 10×10 (p, q) combinations
     against the observed first-event curve. Scale mechanics: the corpus
     collapses to per-user first days (one shuffle) then to the bounded
     daily adoption curve; the grid×days cross join is ~3000 tiny rows.
@@ -2165,7 +2165,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cmask = masks.groupBy("mask").agg(F.count("*").cast("long").alias("c"))
     spine = spark.range(64).select(F.col("id").cast("long").alias("s"))
-    spine_k = spine.crossJoin(F.broadcast(kk)).filter(
+    spine_k = spine.crossJoin(kk).filter(
         F.col("s") < F.expr("shiftleft(CAST(1 AS BIGINT), CAST(k AS INT))")
     )
     v = (
@@ -2191,7 +2191,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("vb") - F.col("va")).alias("marg"),
         )
     )
-    t = terms.crossJoin(F.broadcast(kk))
+    t = terms.crossJoin(kk)
     wnum = (
         F.expr(_fact_sql("sz")) * F.expr(_fact_sql("k - 1 - sz")) * F.col("marg")
     )
@@ -2268,7 +2268,7 @@ def events_propensity_match_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     every user has, so matching found zero control arms and returned
     empty at every tier), outcome = lifetime purchase cents,
     confounder = browsing intensity (view+click count), stratified
-    into {_PM_STRATA} ntile strata. Matching is rank-pairing within (stratum, arm) ordered by
+    into 10 ntile strata. Matching is rank-pairing within (stratum, arm) ordered by
     (covariate, user_id) — fully deterministic (no caliper randomness),
     reproducible across engines, and each unmatched surplus row drops
     out via the inner join exactly as 1:1 matching without replacement

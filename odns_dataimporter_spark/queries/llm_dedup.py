@@ -1578,7 +1578,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kk")
     )
     cent = (
-        q.crossJoin(F.broadcast(kk))
+        q.crossJoin(kk)
         .filter(F.col("vec_id") < F.col("kk"))
         .select(F.col("vec_id").alias("cid"), F.col("qe").alias("cvec"))
     )
@@ -1753,7 +1753,7 @@ def dedup_semdedup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kk")
     ).select("kk", F.ceil(F.sqrt(F.col("kk"))).cast("long").alias("cc"))
     cent = (
-        q.crossJoin(F.broadcast(kk))
+        q.crossJoin(kk)
         .filter(F.col("vec_id") < F.col("kk"))
         .select(
             F.col("vec_id").alias("cid"),
@@ -1783,7 +1783,7 @@ def dedup_semdedup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted_rows = q.select(
         "vec_id", "qe", F.pmod(F.col("vec_id"), F.lit(salt_n)).cast("int").alias("salt")
     )
-    salted_cents = cent.crossJoin(F.broadcast(kk.select("cc"))).select(
+    salted_cents = cent.crossJoin(kk.select("cc")).select(
         "cid",
         "cvec",
         "cc",
@@ -2299,7 +2299,7 @@ FROM k GROUP BY doc_id
 )
 def dedup_paragraph_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style sub-document deduplication (Wenzek et al. 2020):
-    split every document into fixed {_CCNET_CHUNK}-token
+    split every document into fixed 12-token
     pseudo-paragraphs (the corpus has no newline structure — real
     paragraph splits swap in transparently), hash each, keep only the
     GLOBALLY FIRST occurrence of every distinct paragraph (ordered by

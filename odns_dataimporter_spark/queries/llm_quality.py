@@ -514,7 +514,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_bp = F.col("n_docs_with") * 100 >= F.lit(_BP_PCT) * F.col("n_docs")
     joined = tri.withColumn(
         "n_docs_with", F.count("*").over(Window.partitionBy("ngram")).cast("long")
-    ).crossJoin(F.broadcast(t))
+    ).crossJoin(t)
     return joined.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_ngrams"),
         F.count_if(is_bp).cast("long").alias("n_boiler"),
@@ -649,7 +649,7 @@ def _dup_spans(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 )
 def text_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-span coverage: the fraction of token
-    positions lying under at least one {N}-gram that also occurs in a
+    positions lying under at least one 4-gram that also occurs in a
     DIFFERENT document — the n-gram-granular form of exact-substring
     dedup (suffix-array dedup's distributed stand-in). Shape: one
     explode to (pos, 60-bit ngram fingerprint) — fixed-width ints, not
@@ -727,7 +727,7 @@ FROM base b LEFT JOIN agg USING (doc_id)
 )
 def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup as a TRANSFORM, not just a score: rewrite
-    each document with every cross-document duplicated {N}-gram span
+    each document with every cross-document duplicated 4-gram span
     REMOVED (Lee et al. 2022 — `text_dup_span_coverage` measures the
     duplicated mass; this op actually strips it, which is the step a
     training pipeline ships). Shape: the same single gram explode →
@@ -834,16 +834,16 @@ FROM a CROSS JOIN tot
 def text_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weight per document: sum over hashed unigram+
     bigram features of ln p_target(f) − ln p_raw(f) with add-one
-    smoothing over {B} buckets (target = the lang='en' slice). The
-    per-bucket counts are ONE {B}-row aggregate computed in the same
+    smoothing over 1024 buckets (target = the lang='en' slice). The
+    per-bucket counts are ONE 1024-row aggregate computed in the same
     scan for both distributions (conditional count), broadcast back
     onto the feature stream with each bucket's log-ratio pre-quantized
     to the 2^20 integer grid — so the per-doc reduction is an EXACT
     integer SUM (map-side combined, order-independent; no ordered fold,
     no collect_list) and the smoothing normalizer folds in as
-    n_feats × scalar from a broadcast 1-row totals aggregate. Shuffles: the {B}-row bucket aggregate
+    n_feats × scalar from a broadcast 1-row totals aggregate. Shuffles: the 1024-row bucket aggregate
     (map-side combined) and the per-doc regroup — both equi-keyed; at
-    100 TB the bucket table is O({B}) regardless of corpus size, which
+    100 TB the bucket table is O(1024) regardless of corpus size, which
     is DSIR's point: the scorer is two broadcast tables and a scan."""
     docs = load_table(spark, sf_dir, "documents")
     # `toks` bound as a column before the bigram lambda reads it
@@ -909,7 +909,7 @@ def text_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar = F.log(
         (F.col("r_total") + _DSIR_BUCKETS).cast("double")
     ) - F.log((F.col("t_total") + _DSIR_BUCKETS).cast("double"))
-    return a.crossJoin(F.broadcast(tot)).select(
+    return a.crossJoin(tot).select(
         "doc_id",
         "n_feats",
         (
@@ -1044,8 +1044,8 @@ FROM g ORDER BY key DESC, doc_id LIMIT {_RESAMPLE_K}
 )
 def sample_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel top-k importance resampling over the DSIR weights: key =
-    log-weight + Gumbel(md5(doc_id)), take the {K} largest — equivalent
-    to sampling {K} docs without replacement with probability
+    log-weight + Gumbel(md5(doc_id)), take the 100 largest — equivalent
+    to sampling 100 docs without replacement with probability
     ∝ exp(weight), but fully deterministic (the Gumbel variate is a
     hash of doc_id, not RNG state) and embarrassingly parallel. The
     top-k collapses to TakeOrderedAndProject (per-partition heads, no

@@ -420,7 +420,7 @@ WHERE rn <= {_KNN_K}
     tags=("llm", "similarity"),
 )
 def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact global k-NN graph over ALL embeddings (k={_KNN_K}) — the
+    """Exact global k-NN graph over ALL embeddings (k=5) — the
     building block for embedding-dedup graphs and retrieval indexes.
 
     Scale shape (block nested loop, no driver collect, no broadcast):
@@ -641,7 +641,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", (F.row_number().over(wseed) - 1).alias("cid")
     )
     cb0 = (
-        sv.join(F.broadcast(seed_cid), "vec_id")
+        sv.join(seed_cid, "vec_id")
         .select("sub", "cid", F.col("sv").alias("cent"))
         # the seed codebook (_PQ_K x _PQ_SUB rows) feeds both the Lloyd
         # assignment and the empty-cell fallback: checkpoint so the
@@ -890,8 +890,8 @@ SELECT probe_id, CAST(3 AS INTEGER), CAST(id3 AS BIGINT),
 @register("sim_mmr_rerank", oracle=_MMR_ORACLE, tags=("llm", "similarity"))
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein):
-    after exact cosine retrieval fills a {_MMR_POOL}-candidate pool per
-    probe, a greedy selector picks {_MMR_K} results maximizing
+    after exact cosine retrieval fills an 8-candidate pool per
+    probe, a greedy selector picks 3 results maximizing
     λ·relevance − (1−λ)·max-similarity-to-already-selected — the
     standard diversity re-rank between retrieval and prompt assembly
     (dedups near-identical passages that all scored high).
@@ -899,13 +899,13 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus-scale work is the relevance stage — the
     same broadcast-probes × streamed-candidates zero-big-shuffle plan
     as sim_topk_cosine, with a per-probe window keeping the top
-    {_MMR_POOL}. The greedy loop then runs on the BOUNDED pool (≤{_MMR_POOL}
+    8. The greedy loop then runs on the BOUNDED pool (≤8
     rows/probe) inside one Arrow-batched applyInPandas — at 100 TB the
     pool rows per probe are constant, so re-rank cost is O(probes), not
     corpus-bound. Determinism: embeddings on the 2^20 integer grid make
     every dot exact; sqrt/×/−/÷ are correctly-rounded IEEE doubles on
     both engines; ties break to the lower cand_id. The oracle unrolls
-    the {_MMR_K} greedy steps as chained CTEs — full rows+schema+hash
+    the 3 greedy steps as chained CTEs — full rows+schema+hash
     parity on an ITERATIVE algorithm."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.select(
@@ -1072,7 +1072,7 @@ WHERE rn <= {_TOP_K}
 )
 def sim_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally maintained exact top-k: candidates are split into
-    a base corpus and a delta batch (vec_id % {_INC_DELTA_MOD} == 0 —
+    a base corpus and a delta batch (vec_id % 10 == 0 —
     the rows that 'just arrived'); the result is the per-probe re-rank
     of UNION(top-k over base, top-k over delta), which equals the
     scratch recompute the oracle runs because the global top-k of a
@@ -1182,7 +1182,7 @@ def embed_decontaminate_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic decontamination: every training vector (vec_id % 50
     != 0, the same held-out split text_decontaminate uses) scored by
     its maximum cosine against the eval slice; flagged when that
-    exceeds τ={_DECON_COS_TAU}. Output: nearest eval vector, quantized
+    exceeds τ=0.3. Output: nearest eval vector, quantized
     score, contamination flag.
 
     Scale shape: the eval slice is a FIXED registry (benchmark suites
@@ -1818,7 +1818,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bm = (
         tf.join(F.broadcast(df), "token")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "doc_id",
             F.floor(score * 1_000_000.0).cast("long").alias("micro"),
@@ -1963,7 +1963,7 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # because the norm is the same fold either way)
     ek = F.slice(F.col("e"), 1, F.col("k").cast("int"))
     vk = (
-        v.crossJoin(F.broadcast(ks))
+        v.crossJoin(ks)
         .select(
             "vec_id",
             "k",
@@ -2446,7 +2446,7 @@ def embed_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale trick: alignment needs NO pair enumeration — per label,
     Σᵢⱼ‖zᵢ−zⱼ‖² = 2n·Σ‖z‖² − 2‖Σz‖², so two moment aggregates replace
     the quadratic loop; uniformity uses a FIXED bounded pair sample
-    (id offsets {_AU_OFFSETS}, linear, deterministic) since exp(−2d²)
+    (id offsets (1, 7, 13), linear, deterministic) since exp(−2d²)
     does not reduce to moments. Shape: one map-side-combined per-label
     moment pass (with a 64-row posexplode for the dim sums), one
     id-keyed self-join for the sample pairs — no quadratic stage at
@@ -2544,7 +2544,7 @@ def embed_alignment_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("e").cast("long").alias("se"),
         )
     )
-    return al.crossJoin(F.broadcast(un)).select(
+    return al.crossJoin(un).select(
         "label",
         "n_c",
         (F.floor(F.col("align") * 1_000_000.0) / 1_000_000.0).alias(

@@ -207,7 +207,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         terms.groupBy("term")
         .agg(F.count("*").alias("doc_freq"))
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .select(
             "term",
             "doc_freq",
@@ -421,7 +421,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v = e.groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
     n = v.agg(F.sum("cnt").alias("n"))
-    j = e.join(F.broadcast(v), "token").crossJoin(F.broadcast(n)).select(
+    j = e.join(F.broadcast(v), "token").crossJoin(n).select(
         "doc_id",
         "pos",
         F.log(F.col("cnt").cast("double") / F.col("n").cast("double")).alias("lp"),
@@ -529,7 +529,7 @@ def text_keywords_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.col("tf") * F.log(F.col("n_docs") / F.col("doc_freq"))
     ranked = (
         tf.join(F.broadcast(df_), "token")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .withColumn(
             "rn",
             F.row_number().over(
@@ -802,7 +802,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (
         bi.join(F.broadcast(bc), ["w1", "w2"])
         .join(F.broadcast(pc), ["w1"])
-        .crossJoin(F.broadcast(vs))
+        .crossJoin(vs)
         .select("doc_id", "pos", lp.alias("lp"))
     )
     a = j.groupBy("doc_id").agg(
@@ -993,7 +993,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
             )
         )
         bests.append(best)
-        w = w.crossJoin(F.broadcast(best)).select(
+        w = w.crossJoin(best).select(
             "token", "wcnt", F.expr(merge_expr).alias("s")
         )
     return w, bests
@@ -1326,9 +1326,9 @@ WHERE levenshtein(a.traj, b.traj) <= {_TRAJ_MAXD}
     tags=("llm", "similarity", "events"),
 )
 def sim_trajectory_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User pairs whose event-type journeys (first {_TRAJ_MAXLEN}
+    """User pairs whose event-type journeys (first 8
     events, one char per type, strictly (ts, event_id)-ordered) are
-    within edit distance {_TRAJ_MAXD}. Blocking key = (⌊len/5⌋,
+    within edit distance 3. Blocking key = (⌊len/5⌋,
     1-char prefix): only same-block users are ever compared, so pair
     generation is an equi join bounded by block size — the trajectory
     analog of the MinHash band trick (with the usual blocking recall
@@ -1427,7 +1427,7 @@ ORDER BY MAX(score_u) DESC, phrase LIMIT {_RAKE_TOPN}
     tags=("llm", "text"),
 )
 def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus top-{N} RAKE keyphrases: stop-word-delimited runs ≤ 4
+    """Corpus top-20 RAKE keyphrases: stop-word-delimited runs ≤ 4
     words, word score = degree/freq over the phrase graph (quantized
     per word, integer-summed per phrase — no float accumulation
     order), phrase score = max over occurrences. Everything is
@@ -1631,7 +1631,7 @@ def text_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bc.join(F.broadcast(pre), "w1")
         .join(F.broadcast(cont), "w2")
-        .crossJoin(F.broadcast(tt))
+        .crossJoin(tt)
         .select(
             "w1",
             "w2",
@@ -1759,7 +1759,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sc = (
         tf.join(F.broadcast(df), "token")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "doc_id",
             F.floor(score * 1_000_000.0).cast("long").alias("micro"),
@@ -1899,7 +1899,7 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         tf.join(F.broadcast(df), "token")
         .join(F.broadcast(qt), "token")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "query_id",
             "doc_id",
@@ -2016,7 +2016,7 @@ def ml_mrr_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         tf.join(F.broadcast(df), "token")
         .join(F.broadcast(qt), "token")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "query_id",
             "doc_id",
@@ -2388,7 +2388,7 @@ def text_readability_smog(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard quality-filter features for training-data selection
     (alongside `text_quality_score`'s length/stopword heuristics).
     Syllables are vowel-group counts (runs of [aeiouy], min 1 per
-    word) and sentences are fixed {_READ_SENT}-word spans, the
+    word) and sentences are fixed 15-word spans, the
     documented adaptation for this punctuation-free corpus; with real
     prose, swap the two regexes. Scale shape: ZERO shuffle — every
     statistic is an array higher-order-function fold inside the row
@@ -2493,7 +2493,7 @@ FROM s
 def text_watermark_greenlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM watermark detection (Kirchenbauer et al. 2023's green-list
     scheme): each token is "green" iff a hash seeded by its PREDECESSOR
-    lands in the γ={_WM_GAMMA_PCT}% list; a watermarking sampler biases
+    lands in the γ=25% list; a watermarking sampler biases
     generation toward green tokens, so watermarked text shows a
     one-sided z = (g − γT)/√(Tγ(1−γ)) ≫ 0 while natural text sits near
     zero — the standard synthetic-text provenance screen a training
@@ -2748,7 +2748,7 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros and pack (nll, n_pieces) into ONE additive integer
     (cost·128 + 1), so the whole DP is exact int64 minimization — no
     float ordering anywhere. The DP itself is a bounded-state fold
-    (the last {_UNI_MAXP} best scores as scalar struct fields, shifted
+    (the last 5 best scores as scalar struct fields, shifted
     each step), so there is NO list accumulator (DuckDB list_reduce
     can't carry one) and no per-position recursion: one fold per
     DISTINCT word, vocabulary-sized like all tokenizer ops — the
@@ -2786,7 +2786,7 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = cnt.agg(F.sum("occ").cast("long").alias("total"))
     costs = (
-        cnt.crossJoin(F.broadcast(tot))
+        cnt.crossJoin(tot)
         .filter(F.col("occ") > 0)
         .select(
             "piece",
@@ -2803,7 +2803,7 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cost"),
         )
     )
-    cm = costs.crossJoin(F.broadcast(tot)).agg(
+    cm = costs.crossJoin(tot).agg(
         F.map_from_entries(
             F.array_sort(F.collect_list(F.struct("piece", "cost")))
         ).alias("cost_map"),
@@ -2847,7 +2847,7 @@ def tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(1, _UNI_MAXP)
         ],
     )
-    seg = vterms.crossJoin(F.broadcast(cm)).select(
+    seg = vterms.crossJoin(cm).select(
         "token",
         F.aggregate(
             F.sequence(F.lit(1), F.greatest(F.length("token"), F.lit(1))),
@@ -2962,7 +2962,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = docs.agg((F.max("doc_id") + 1).alias("hi")).localCheckpoint(
         eager=False
     )
-    dd = docs.crossJoin(F.broadcast(bounds)).select(
+    dd = docs.crossJoin(bounds).select(
         "doc_id",
         F.least(
             (F.col("doc_id") * _HEAPS_BINS / F.col("hi")).cast("long"),
@@ -2980,7 +2980,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("first_doc"))
     )
     voc_bin = (
-        firsts.crossJoin(F.broadcast(bounds))
+        firsts.crossJoin(bounds)
         .groupBy(
             F.least(
                 (F.col("first_doc") * _HEAPS_BINS / F.col("hi")).cast("long"),
@@ -3081,7 +3081,7 @@ FROM top ORDER BY df DESC, term ASC
 def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Term burstiness via the Fano factor (variance-to-mean ratio of
     per-document occurrence counts, zeros included) for the
-    {_BURST_TOPN} most document-frequent terms — Church & Gale's
+    20 most document-frequent terms — Church & Gale's
     dispersion diagnostic: function words sit near Fano≈1 (Poisson),
     topical/bursty terms far above — the signal that separates
     stopword candidates from content terms better than raw frequency
@@ -3090,7 +3090,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q=Σx² over occurrences only, Fano = (N·Q − S²)/(N·S) exactly
     (absent docs contribute 0 to both) — one token explode with
     map-side combine to (term, doc) counts, one per-term reduce, a
-    broadcast 1-row doc count, deterministic top-{_BURST_TOPN} by
+    broadcast 1-row doc count, deterministic top-20 by
     (df, term) via TakeOrderedAndProject. Exact int64 into one final
     division."""
     docs = load_table(spark, sf_dir, "documents")
@@ -3107,7 +3107,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = docs.agg(F.count("*").cast("long").alias("n"))
     top = (
-        per_term.crossJoin(F.broadcast(nd))
+        per_term.crossJoin(nd)
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(_BURST_TOPN)
     )
@@ -3169,15 +3169,15 @@ WHERE co.c12 >= {_PMI_MIN_CO}
 )
 def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-level pointwise mutual information for word pairs
-    restricted to the top-{_PMI_VOCAB} document-frequency vocabulary:
+    restricted to the top-50 document-frequency vocabulary:
     PMI(x, y) = ln(N·c_xy / (c_x·c_y)) over co-document counts, the
     classic collocation/association score (Church & Hanks 1990) a
     curation pipeline uses to find template phrases and topic clusters
     beyond single-token stats. Scale design: the quadratic pair
     expansion happens ONLY inside the vocab-filtered per-document word
-    sets — each document contributes at most C({_PMI_VOCAB},2) pairs
+    sets — each document contributes at most C(50,2) pairs
     regardless of its length, and the vocab filter is a broadcast
-    semi-join against a {_PMI_VOCAB}-row table, so the corpus-scale
+    semi-join against a 50-row table, so the corpus-scale
     stages are one distinct-(doc, word) aggregate and one bounded-key
     pair count (the decontam_ngram broadcast rule + the bounded-block
     rule from the Jaccard family, composed). Determinism: all counts
@@ -3198,7 +3198,7 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_PMI_VOCAB)
         .localCheckpoint(eager=False)  # feeds the filter and both count joins
     )
-    dv = dw.join(F.broadcast(voc.select("w")), "w").select("doc_id", "w")
+    dv = dw.join(voc.select("w"), "w").select("doc_id", "w")
     nd = docs.agg(F.count("*").cast("long").alias("n"))
     a = dv.select("doc_id", F.col("w").alias("w1"))
     b = dv.select("doc_id", F.col("w").alias("w2"))
@@ -3212,9 +3212,9 @@ def text_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = voc.select(F.col("w").alias("w1"), F.col("c").alias("c1"))
     v2 = voc.select(F.col("w").alias("w2"), F.col("c").alias("c2"))
     out = (
-        co.join(F.broadcast(v1), "w1")
-        .join(F.broadcast(v2), "w2")
-        .crossJoin(F.broadcast(nd))
+        co.join(v1, "w1")
+        .join(v2, "w2")
+        .crossJoin(nd)
     )
     pmi = F.ln(
         F.col("c12").cast("double")
@@ -3300,16 +3300,16 @@ SELECT node AS word, trq / 1000000.0 AS textrank_q6 FROM (
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): weighted
-    PageRank (damping 0.85, {_TR_ITERS} unrolled iterations) over the
-    UNDIRECTED co-document graph of the top-{_PMI_VOCAB} vocabulary
-    (edges = co-document counts ≥ {_TR_MIN_CO}, from the same bounded
-    pair machinery as `text_pmi_pairs`), reporting the top-{_TR_TOP}
+    PageRank (damping 0.85, 3 unrolled iterations) over the
+    UNDIRECTED co-document graph of the top-50 vocabulary
+    (edges = co-document counts ≥ 2, from the same bounded
+    pair machinery as `text_pmi_pairs`), reporting the top-10
     words by stationary score — the graph-centrality upgrade over the
     frequency/RAKE keyword ops (`text_keywords_topk`,
     `text_rake_keywords`): a word ranks high for co-occurring with
     other well-connected words, not for raw count. Scale: corpus-scale
     work is exactly text_pmi_pairs' (one distinct-(doc,word) aggregate
-    + a vocab-bounded pair count); the graph is ≤ {_PMI_VOCAB} nodes
+    + a vocab-bounded pair count); the graph is ≤ 50 nodes
     by construction, so the iterations run as ordered higher-order
     folds on ONE gathered row (the graph_pagerank grammar, same
     src-ascending fold determinism), and the final cut orders on the
@@ -3327,7 +3327,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _PMI_VOCAB)
         .select("w")
     )
-    dv = dw.join(F.broadcast(voc), "w").select("doc_id", "w")
+    dv = dw.join(voc, "w").select("doc_id", "w")
     a = dv.select("doc_id", F.col("w").alias("w1"))
     b = dv.select("doc_id", F.col("w").alias("w2"))
     co = (

@@ -124,7 +124,7 @@ def stats_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         cells.join(F.broadcast(rt), "lang")
         .join(F.broadcast(ct), "source")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
     )
     exp = (
         F.col("rt").cast("double")
@@ -337,7 +337,7 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("pid"), F.col("qe").alias("pqe"))
     )
     d = (
-        v.crossJoin(F.broadcast(seed))
+        v.crossJoin(seed)
         .select("vec_id", "qe", d2(F.col("qe"), F.col("pqe")).alias("dmin"))
         .localCheckpoint(eager=False)
     )
@@ -365,7 +365,7 @@ def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if n < _KC_ROUNDS:
             d = (
-                d.crossJoin(F.broadcast(pick))
+                d.crossJoin(pick)
                 .select(
                     "vec_id",
                     "qe",
@@ -437,7 +437,7 @@ def ml_logreg_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     grad = (F.lit(0.5) * F.col("s_signed")) / (
         F.col("n_rows") * F.lit(float(_LR_SCALE))
     )
-    return g.crossJoin(F.broadcast(n)).select(
+    return g.crossJoin(n).select(
         "dim", "s_signed", "n_rows", grad.alias("grad"), (-grad).alias("w_new")
     )
 
@@ -485,7 +485,7 @@ def ml_naive_bayes_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("lang").orderBy(F.col("n").desc(), "token")
     ranked = (
         cnt.join(F.broadcast(totals), "lang")
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= _NB_TOPK)
     )
@@ -1493,7 +1493,7 @@ def ml_confusion_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hit = F.col("s") >= F.col("thr")
     g = (
-        b.crossJoin(F.broadcast(t))
+        b.crossJoin(t)
         .groupBy("thr")
         .agg(
             F.sum(F.when(hit & (F.col("y") == 1), 1).otherwise(0))
@@ -2270,7 +2270,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sq").over(w).cast("long").alias("sl"),
         F.sum("s2q").over(w).cast("long").alias("s2l"),
     )
-    qpt = qp.crossJoin(F.broadcast(tot)).filter(
+    qpt = qp.crossJoin(tot).filter(
         F.col("nn") - F.col("nl") > 0
     )
     gain1 = F.col("sl").cast("double") * F.col("sl") / F.col("nl") + (
@@ -2286,7 +2286,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     m0 = F.col("ss").cast("double") / F.col("nn")
     st1 = (
         qpt.join(
-            F.broadcast(best1),
+            best1,
             F.col("qv").cast("double") == F.col("t1"),
         )
         .select(
@@ -2346,7 +2346,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nd").cast("long").alias("nn2"),
         F.sum("rd").cast("long").alias("rr"),
     )
-    dpt = dp.crossJoin(F.broadcast(dtot)).filter(
+    dpt = dp.crossJoin(dtot).filter(
         F.col("nn2") - F.col("nl2") > 0
     )
     gain2 = F.col("rl2").cast("double") * F.col("rl2") / F.col("nl2") + (
@@ -2361,7 +2361,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     st2 = (
         dpt.join(
-            F.broadcast(best2),
+            best2,
             F.col("dv").cast("double") == F.col("t2"),
         )
         .select(
@@ -2426,7 +2426,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         "double"
     ) * F.col("ss") / F.col("nn")
     r1 = (
-        st1.crossJoin(F.broadcast(sse))
+        st1.crossJoin(sse)
         .select(
             F.lit(1).cast("long").alias("round"),
             F.lit("l_quantity").alias("feature"),
@@ -2445,7 +2445,7 @@ def ml_gbm_residual_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     r2 = (
-        st2.crossJoin(F.broadcast(sse))
+        st2.crossJoin(sse)
         .select(
             F.lit(2).cast("long").alias("round"),
             F.lit("l_discount_pct").alias("feature"),
@@ -2738,7 +2738,7 @@ def ml_ridge_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear probe on the embedding space — ridge regression against a
     binary label (label<5), THE standard representation-quality probe
     (if a linear readout separates the classes, the geometry encodes
-    them): minimize ‖Xw−y‖²/N + λ‖w‖² by {_RIDGE_STEPS} gradient steps
+    them): minimize ‖Xw−y‖²/N + λ‖w‖² by 25 gradient steps
     w ← w − η(Cw − b + λw) where C = XᵀX/N and b = Xᵀy/N are EXACT
     sufficient statistics — the corpus collapses to d² + d integer
     cells in one pass (the embed_covariance derivation, uncentered),
@@ -2830,7 +2830,7 @@ def ml_ridge_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, u: acc + u,
         )
 
-    state = mat.crossJoin(F.broadcast(bvec))
+    state = mat.crossJoin(bvec)
 
     def let(val, body):
         return F.element_at(F.transform(F.array(val), body), 1)
@@ -2983,7 +2983,7 @@ FROM bl, fin, nll
 )
 def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Platt scaling — fit the sigmoid calibrator P(y=1|s) = σ(A·s + B)
-    by {_PLATT_STEPS} Newton-Raphson steps, turning the raw hash-model
+    by 8 Newton-Raphson steps, turning the raw hash-model
     score (shared with `ml_auc_roc`/`ml_calibration_ece`) into an
     actual probability — the post-hoc calibration fit that ECE only
     MEASURES. The scale mechanism: scores collapse to their bounded
@@ -3084,7 +3084,7 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pcal = 1.0 / (1.0 + F.exp(-(a_ * (F.col("s") / 1000.0) + b_)))
     nll = (
-        h.crossJoin(F.broadcast(fin1))
+        h.crossJoin(fin1)
         .agg(
             F.sum(
                 F.when(
@@ -3120,7 +3120,7 @@ def ml_platt_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cal_micro"),
         )
     )
-    return fin1.crossJoin(F.broadcast(nll)).select(
+    return fin1.crossJoin(nll).select(
         "n_bins",
         "pos",
         "tot",
@@ -3224,7 +3224,7 @@ GROUP BY a3.cluster, c3.cvec
     tags=("ml", "embedding", "iterative"),
 )
 def ml_kmeans_lloyd3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three full Lloyd iterations of k-means (k={_KM_K}) over the
+    """Three full Lloyd iterations of k-means (k=8) over the
     embedding corpus — the multi-pass completion of the single-step
     `ml_kmeans_step`, showing the corpus-scale iteration discipline:
     per round, assignment is MAP-ONLY (the k×d centroid table rides in
@@ -3295,7 +3295,7 @@ def ml_kmeans_lloyd3(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.collect_list(F.struct("cluster", "cvec"))
             ).alias("cs")
         )
-        assigned = q.crossJoin(F.broadcast(carr)).select(
+        assigned = q.crossJoin(carr).select(
             "vec_id",
             "qv",
             F.aggregate(
@@ -3453,7 +3453,7 @@ def ml_gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution — the classic unsupervised density split (bimodal
     latency/revenue populations) and the engine's EM-family entry
     beside k-means (hard assignment) and the Kalman filter (linear-
-    Gaussian state): {_GMM_STEPS} expectation–maximization rounds where
+    Gaussian state): 10 expectation–maximization rounds where
     responsibilities r(x) = w₁φ₁/(w₁φ₁+w₂φ₂) reweight the per-bin
     moment sums. The scale mechanism: values collapse ONCE to a
     bounded deci-unit histogram (the corpus is never rescanned), and
@@ -3462,7 +3462,7 @@ def ml_gmm_em_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the responsibility expression written once and reused verbatim.
     Init is moment-matched (means ±σ/2 around the sample mean, sample
     variance, equal weights) from exact int64 sums; a variance floor
-    ({_GMM_VMIN}) guards collapse on degenerate inputs; floor-q6
+    (0.01) guards collapse on degenerate inputs; floor-q6
     outputs."""
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(
@@ -3624,9 +3624,9 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool-adjacent-violators, ŷᵢ = max_{j≤i} min_{k≥i} mean(y over bins
     j..k) (Ayer et al. 1955 — identical output to the sequential PAVA
     stack without the sequential stack). The scale mechanism: the
-    corpus collapses to a {_ISO_BINS}-bin histogram in ONE shuffle
+    corpus collapses to a 64-bin histogram in ONE shuffle
     (exact int64 n/p per bin + prefix sums), and the minimax runs over
-    the bounded (j ≤ i ≤ k) triple grid (≤ {_ISO_BINS}³/2 tiny rows) —
+    the bounded (j ≤ i ≤ k) triple grid (≤ 64³/2 tiny rows) —
     corpus-size-independent, like the tokenizer's vocab-table rounds.
     Range means are single divisions of exact ints, so min/max over
     them is order-insensitive; outputs floored at 1e-6. The fitted
@@ -4136,11 +4136,11 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("n").cast("double") * smax * smax)
         * 1e6
     )
-    pb = g.crossJoin(F.broadcast(t)).agg(
+    pb = g.crossJoin(t).agg(
         F.sum(F.floor(res_term).cast("long")).cast("long").alias("res_micro"),
         F.sum(F.floor(rel_term).cast("long")).cast("long").alias("rel_micro"),
     )
-    return t.crossJoin(F.broadcast(pb)).select(
+    return t.crossJoin(pb).select(
         F.col("nn").alias("n"),
         (
             F.floor(
@@ -4272,14 +4272,14 @@ def ml_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)  # broadcast totals reused by both MADs
     h1 = b.groupBy("x1").agg(F.count("*").cast("long").alias("c"))
     h2 = b.groupBy("x2").agg(F.count("*").cast("long").alias("c"))
-    mad1 = h1.crossJoin(F.broadcast(s)).agg(
+    mad1 = h1.crossJoin(s).agg(
         F.sum(
             F.col("c") * F.abs(F.col("n") * F.col("x1") - F.col("s1"))
         )
         .cast("long")
         .alias("mad1_num")
     )
-    mad2 = h2.crossJoin(F.broadcast(s)).agg(
+    mad2 = h2.crossJoin(s).agg(
         F.sum(
             F.col("c") * F.abs(F.col("n") * F.col("x2") - F.col("s2"))
         )
@@ -4287,8 +4287,8 @@ def ml_linear_shap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mad2_num")
     )
     d = (
-        s.crossJoin(F.broadcast(mad1))
-        .crossJoin(F.broadcast(mad2))
+        s.crossJoin(mad1)
+        .crossJoin(mad2)
         .select(
             F.col("n").alias("n_rows"),
             *[

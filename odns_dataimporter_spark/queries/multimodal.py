@@ -401,7 +401,7 @@ FROM fr
 def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio segmentation: payloads round-trip through actual PCM16
     WAV files; the chunk-walking decoder recovers the samples and
-    non-overlapping {_AUDIO_FRAME}-sample frame energies (Σ s², exact
+    non-overlapping 128-sample frame energies (Σ s², exact
     int64 — no float anywhere) drive an active-frame count against a
     fixed threshold: the energy-VAD primitive that segments speech
     from silence before any expensive ASR/embedding stage. The oracle
@@ -701,7 +701,7 @@ FROM s
 def multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio feature extraction on REAL decoded PCM16 samples:
     zero-crossing count (the classic voiced/unvoiced and pitch-band
-    discriminator), per-{_ZCR_FRAME}-sample frame energy gating (count
+    discriminator), per-100-sample frame energy gating (count
     of frames above a fixed energy threshold — the VAD primitive), and
     peak amplitude. The WAV payloads are synthesized from corpus bytes
     and decoded back by the RIFF chunk walker (media.py), so the

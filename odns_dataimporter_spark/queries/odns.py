@@ -700,7 +700,7 @@ ORDER BY a_record
 )
 def odns_anycast_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain analytics: A records answered by resolvers spread across
-    ≥{_ANY_MIN_COUNTRIES} countries — the anycast / CDN-content
+    ≥2 countries — the anycast / CDN-content
     indicator (one answer IP visible from many vantage countries) and
     the complement of `odns_geo_mismatch`'s per-org view. Pure
     grouped COUNT DISTINCT over the tcp∪udp ingest with an integer

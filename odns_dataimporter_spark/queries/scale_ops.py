@@ -494,7 +494,7 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = (
         ev.select("event_type", "event_id")
         .join(F.broadcast(c), "event_type")
-        .crossJoin(F.broadcast(mn))
+        .crossJoin(mn)
         .filter((hv % F.col("n_orig")) < F.col("n_min"))
         .groupBy("event_type")
         .agg(
@@ -595,7 +595,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = w.agg(F.sum("w_micro").cast("long").alias("w_total"))
     alloc = F.floor(500.0 * F.col("w_micro") / F.col("w_total")).cast("long")
-    return w.crossJoin(F.broadcast(t)).select(
+    return w.crossJoin(t).select(
         "event_type",
         "n_h",
         (F.floor(F.col("sigma_h") * 1_000_000.0) / 1_000_000.0).alias(
@@ -669,7 +669,7 @@ def sample_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DoReMi-style domain-mixture optimization (Xie et al. 2023,
     reduced to its multiplicative-weights core): per source domain, a
     deterministic hardness proxy (chars per token — stands in for the
-    proxy-model excess loss), then {_DOREMI_STEPS} rounds of
+    proxy-model excess loss), then 10 rounds of
     w ← normalize(w·exp(η·(loss − ⟨w, loss⟩))) — domains harder than
     the current mixture average get upweighted, the exact update
     Group-DRO/DoReMi uses to pick training-corpus sampling weights.

@@ -119,7 +119,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("tiesum"),
         F.sum("ct").cast("long").alias("n"),
     )
-    h = gr.crossJoin(F.broadcast(ties)).groupBy("n", "tiesum").agg(
+    h = gr.crossJoin(ties).groupBy("n", "tiesum").agg(
         F.count("*").cast("long").alias("k"),
         F.sum(
             F.col("r_x2").cast("double")
@@ -313,7 +313,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mid")
     )
     cents = F.round(F.col("value") * 100).cast("long")
-    u = ev.crossJoin(F.broadcast(b)).groupBy("user_id", "mid").agg(
+    u = ev.crossJoin(b).groupBy("user_id", "mid").agg(
         F.sum(
             F.when(
                 (F.col("event_type") == "purchase")
@@ -439,7 +439,7 @@ def stats_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mid")
     )
-    u = ev.crossJoin(F.broadcast(b)).groupBy("user_id", "mid").agg(
+    u = ev.crossJoin(b).groupBy("user_id", "mid").agg(
         F.max(
             F.when(
                 (F.col("event_type") == "purchase")
@@ -635,7 +635,7 @@ def stats_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rich = F.col("cents") * F.col("n_users") > F.col("tot_c")
     cells = (
-        u.crossJoin(F.broadcast(t))
+        u.crossJoin(t)
         .groupBy("n_users", "tot_c")
         .agg(
             F.sum(F.when((F.col("trt") == 1) & rich, 1).otherwise(0))

@@ -39,7 +39,7 @@ def _dense_hourly_counts(ev: DataFrame) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("hour")
     )
-    grid = ev.select("event_type").distinct().crossJoin(F.broadcast(spine))
+    grid = ev.select("event_type").distinct().crossJoin(spine)
     return (
         grid.join(agg, ["event_type", "hour"], "left")
         .select(
@@ -262,7 +262,7 @@ def stats_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ev.agg(
         F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2").alias("mid")
     )
-    v = ev.crossJoin(F.broadcast(b)).select(
+    v = ev.crossJoin(b).select(
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.when(F.unix_micros("ts") <= F.col("mid"), 1).otherwise(0).alias("early"),
@@ -552,7 +552,7 @@ def stats_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         expr = F.when(cond, F.lit(v)) if expr is None else expr.when(cond, F.lit(v))
     obs = F.col("n").cast("double") / F.col("total")
     return (
-        d.crossJoin(F.broadcast(t))
+        d.crossJoin(t)
         .select(
             "digit",
             "n",
@@ -832,7 +832,7 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = t.agg(F.max("last_ts").alias("global_max"))
     lag = F.unix_micros("global_max") - F.unix_micros("last_ts")
-    return t.crossJoin(F.broadcast(g)).select(
+    return t.crossJoin(g).select(
         "event_type",
         "n",
         ts_str("last_ts").alias("last_ts"),
@@ -988,7 +988,7 @@ FROM nn,
 )
 def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% bootstrap confidence interval for the mean daily revenue:
-    {B} replicates, each drawing n days with replacement where draw i
+    200 replicates, each drawing n days with replacement where draw i
     of replicate b reads index md5('bs|b|i') % n — fully deterministic
     resampling (hash, not RNG), so both engines draw identical samples
     and the CI is value-hash-checkable. Shape: the day series reduces
@@ -1246,8 +1246,8 @@ def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0.0)
     )
     return (
-        s.crossJoin(F.broadcast(nn))
-        .crossJoin(F.broadcast(ties))
+        s.crossJoin(nn)
+        .crossJoin(ties)
         .select(
             n.alias("n_days"),
             "s_stat",
@@ -1516,7 +1516,7 @@ def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("d_micro") >= F.col("d_obs_micro"), 1).otherwise(0)
     ).cast("long")
     return (
-        dg.crossJoin(F.broadcast(obs))
+        dg.crossJoin(obs)
         .groupBy("diff_c4", "d_obs_micro")
         .agg(
             F.count("*").cast("long").alias("n_draws"),
@@ -1615,7 +1615,7 @@ def stats_cvm_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2"
         ).alias("mid")
     )
-    v = ev.crossJoin(F.broadcast(b)).select(
+    v = ev.crossJoin(b).select(
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.when(F.unix_micros("ts") <= F.col("mid"), 1)
@@ -1782,7 +1782,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count("*").cast("long").alias("cnt"))
     cells = cells.localCheckpoint(eager=False)
     tot = cells.agg(F.sum("cnt").cast("long").alias("n"))
-    u = cells.crossJoin(F.broadcast(tot))
+    u = cells.crossJoin(tot)
     for v in _SPR_VARS:
         marg = cells.groupBy(v).agg(F.sum("cnt").cast("long").alias("c"))
         wcum = (
@@ -1842,7 +1842,7 @@ def stats_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias(f"sp_{a}_{b}")
         )
-    s = u.groupBy().agg(*aggs).crossJoin(F.broadcast(tot))
+    s = u.groupBy().agg(*aggs).crossJoin(tot)
 
     def rho(a, b):
         n = F.col("n").cast("double")
@@ -1958,7 +1958,7 @@ def stats_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = (
         a.join(b, F.col("group_a") < F.col("group_b"))
-        .crossJoin(F.broadcast(p))
+        .crossJoin(p)
     )
     diff = (
         F.col("s_a").cast("double") / F.col("n_a")
@@ -2185,10 +2185,10 @@ FROM d
 def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung–Box portmanteau test for white noise on the dense hourly
     event-count series per event type — "is this series autocorrelated
-    at ALL in the first {_LB_LAGS} lags?", the standard residual
+    at ALL in the first 6 lags?", the standard residual
     diagnostic after any of the engine's forecasters (Holt-Winters,
     Croston, STL): Q = n(n+2)·Σₖ ρ̂ₖ²/(n−k) ~ χ²(6), rejected above
-    {_LB_CHI2_95_6DF}. Scale shape: ONE events-scale shuffle builds the
+    12.592. Scale shape: ONE events-scale shuffle builds the
     hourly counts; all 6 lag columns come from a single per-type window
     pass (one sort, 6 lag reads — not 6 windows); per-type sufficient
     statistics (Σxyₖ, Σx|ₖ, Σy|ₖ, cₖ per lag + n, Σx, Σx²) are exact
@@ -2283,7 +2283,7 @@ def _dense_daily_counts(ev: DataFrame) -> DataFrame:
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 day"))).alias("day")
     )
     types = ev.select("event_type").distinct()
-    grid = types.crossJoin(F.broadcast(spine))
+    grid = types.crossJoin(spine)
     return grid.join(agg, ["event_type", "day"], "left").select(
         "event_type", "day", F.coalesce("n", F.lit(0)).cast("long").alias("x")
     )
@@ -2653,7 +2653,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     after Pearson (`stats_corr_matrix`) and Spearman
     (`stats_spearman_corr`), and the one whose naive definition is
     O(n²) pair counting. The scale mechanism makes it O(cells): values
-    quantize onto a BOUNDED ({_KT_XBINS}×24 per type) dense grid in one
+    quantize onto a BOUNDED (250×24 per type) dense grid in one
     corpus shuffle, then concordant/discordant pair counts come from
     exact 2D suffix sums — two window passes (per-column suffix over
     hours, then per-row suffix over value bins of those partials), so
@@ -2675,7 +2675,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(24).select(F.col("id").alias("yb"))
     )
     grid = (
-        types.crossJoin(F.broadcast(spine))
+        types.crossJoin(spine)
         .join(cells0, ["event_type", "xb", "yb"], "left")
         .select(
             "event_type",
@@ -2819,7 +2819,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = (
         cells.join(F.broadcast(rm), "event_type")
         .join(F.broadcast(cm), "hb")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .agg(
             F.sum(
                 F.floor(
@@ -2836,7 +2836,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     chi2_micro = (F.col("s_micro") - F.col("n") * 1_000_000).cast("double")
     return (
-        tot.crossJoin(F.broadcast(terms))
+        tot.crossJoin(terms)
         .select(
             "n",
             F.col("nr").alias("n_rows_dim"),
@@ -3110,7 +3110,7 @@ FROM flags GROUP BY 1 ORDER BY 1
 )
 def ts_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bollinger-band breach detection on the hourly count series — a
-    trailing {_BB_WIN}-hour mean ± 2σ envelope, the volatility-aware
+    trailing 24-hour mean ± 2σ envelope, the volatility-aware
     cousin of `ts_rolling_zscore`'s fixed-window z-score. The entire
     breach predicate is EXACT integer arithmetic via cross-
     multiplication: |x − S/n| > 2·√((nQ−S²)/n²)  ⇔  (n·x−S)² >
@@ -3219,8 +3219,8 @@ FROM agg
     tags=("analytics", "stats"),
 )
 def stats_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cliff's delta ordinal effect size between the '{_CD_A}' and
-    '{_CD_B}' value distributions — the nonparametric companion to
+    """Cliff's delta ordinal effect size between the 'purchase' and
+    'click' value distributions — the nonparametric companion to
     `stats_mann_whitney` (same dominance counts, but reported as the
     normalized effect δ = (#(x>y) − #(x<y))/(n₁n₂) with Romano's
     magnitude labels, because at 100 TB the U test's p-value is always
@@ -3347,7 +3347,7 @@ FROM fit ORDER BY event_type
 )
 def ts_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hurst exponent per event type via classical rescaled-range (R/S)
-    analysis over dyadic block sizes {_HURST_SIZES} hours — the
+    analysis over dyadic block sizes (8, 16, 32, 64) hours — the
     long-range-dependence probe (H≈0.5 random walk, H>0.5 persistent/
     trending, H<0.5 mean-reverting) that tells a capacity planner
     whether hourly load has memory. Exactness ladder: within each
@@ -3650,7 +3650,7 @@ FROM sums
     tags=("analytics", "stats"),
 )
 def stats_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Székely's energy distance between the '{_CD_A}' and '{_CD_B}'
+    """Székely's energy distance between the 'purchase' and 'click'
     value distributions — E = 2E|X−Y| − E|X−X'| − E|Y−Y'|, the
     two-sample test that is consistent against ALL alternatives (KS
     only sees the max CDF gap; energy integrates the whole
@@ -3799,7 +3799,7 @@ def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("v").alias("m"))
     )
     cells = (
-        q.crossJoin(F.broadcast(med))
+        q.crossJoin(med)
         .groupBy("event_type")
         .agg(
             F.sum(F.when(F.col("v") > F.col("m"), 1).otherwise(0))
@@ -3820,13 +3820,13 @@ def stats_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = F.col("n").cast("double") * F.col("above") - ni * F.col("ta")
     term = F.try_divide(dev * dev, ni * F.col("ta") * F.col("tb")) * 1e6
     chi = (
-        cells.crossJoin(F.broadcast(tot))
+        cells.crossJoin(tot)
         .agg(F.sum(F.floor(term).cast("long")).cast("long").alias("chi_micro_part"))
     )
     ncells = cells.agg((F.count("*") - 1).cast("long").alias("dof"))
     return (
-        tot.crossJoin(F.broadcast(chi))
-        .crossJoin(F.broadcast(ncells))
+        tot.crossJoin(chi)
+        .crossJoin(ncells)
         .select(
             "n",
             F.col("ta").alias("n_above"),
@@ -3881,8 +3881,8 @@ FROM terms
     tags=("analytics", "stats"),
 )
 def stats_ad_twosample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anderson-Darling two-sample statistic between the '{_CD_A}' and
-    '{_CD_B}' value distributions — the tail-weighted companion to
+    """Anderson-Darling two-sample statistic between the 'purchase' and
+    'click' value distributions — the tail-weighted companion to
     `stats_ks_drift` (KS sees the max CDF gap, CvM the average, AD
     up-weights the tails by 1/(F(1−F)), which is where training-data
     drift usually hides). Scholz-Stephens tie-adjusted discrete form

@@ -154,7 +154,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("m"))
     return (
-        ev.crossJoin(F.broadcast(mx))
+        ev.crossJoin(mx)
         .filter(F.col("ts") <= F.col("m") - F.expr("INTERVAL 1 HOUR"))
         .groupBy(F.window("ts", "1 day"))
         .agg(F.count("*").alias("n_events"))
@@ -451,7 +451,7 @@ QUALIFY row_number() OVER (PARTITION BY c.event_type
     tags=("streaming", "analytics"),
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-type heavy hitters (top-{_HH_TOPK} users by event
+    """Exact per-type heavy hitters (top-8 users by event
     count, lowest-id tiebreak, with traffic share) — the BATCH ground
     truth for the streaming SpaceSaving sketch
     (streaming/jobs.py::stream_heavy_hitters_spacesaving): the

@@ -76,7 +76,7 @@ def ts_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("hour")
     )
-    grid = ev.select("event_type").distinct().crossJoin(F.broadcast(spine))
+    grid = ev.select("event_type").distinct().crossJoin(spine)
     w = (
         W.partitionBy("event_type")
         .orderBy("hour")
@@ -670,7 +670,7 @@ def stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(unix_micros(MIN(ts)) + unix_micros(MAX(ts))) DIV 2").alias("mid")
     )
     c = (
-        ev.crossJoin(F.broadcast(b))
+        ev.crossJoin(b)
         .groupBy("event_type")
         .agg(
             F.count(F.when(F.unix_micros("ts") <= F.col("mid"), 1))
@@ -694,7 +694,7 @@ def stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (F.col("n_early") + 1).cast("double") / (F.col("te") + F.col("k")).cast("double")
     q = (F.col("n_late") + 1).cast("double") / (F.col("tl") + F.col("k")).cast("double")
     return (
-        c.crossJoin(F.broadcast(tot))
+        c.crossJoin(tot)
         .select(
             "event_type",
             "n_early",
@@ -751,7 +751,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wcum = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
     c = (
-        d.crossJoin(F.broadcast(t))
+        d.crossJoin(t)
         .withColumn(
             "cusum_scaled",
             F.sum(
@@ -881,7 +881,7 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("xs").cast("long").alias("x0"), F.max("xs").cast("long").alias("x1")
     )
     B = _LTTB_BUCKETS
-    pb = p.crossJoin(F.broadcast(b0)).select(
+    pb = p.crossJoin(b0).select(
         "event_id",
         "xs",
         "yc",
@@ -1067,7 +1067,7 @@ def stats_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     m = d.agg(F.min("day").alias("d0"))
-    x = d.crossJoin(F.broadcast(m)).select(
+    x = d.crossJoin(m).select(
         "event_type", F.datediff("day", "d0").cast("long").alias("xi"), "y"
     )
     a = x.select("event_type", F.col("xi").alias("xa"), F.col("y").alias("ya"))
@@ -1701,7 +1701,7 @@ FROM sym s JOIN words w USING (event_type)
 def ts_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAX symbolic approximation (Lin/Keogh et al. 2003) of each
     event-type's daily-count series: z-normalize, Piecewise Aggregate
-    Approximation into {_SAX_W} equal segments, then map each segment
+    Approximation into 8 equal segments, then map each segment
     mean onto a 4-letter alphabet through the standard Gaussian
     breakpoints (±0.6745, 0) — turning every series into a short
     symbolic word usable for motif mining, indexing, and cheap
@@ -1902,7 +1902,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.cy").cast("long").alias("cyk1"),
         (-F.col("b.ng")).alias("g"),
     )
-    sides_src = pp.crossJoin(F.broadcast(root)).filter(
+    sides_src = pp.crossJoin(root).filter(
         (F.col("t") < F.col("k1"))
         | ((F.col("t") > F.col("k1")) & (F.col("t") < F.col("dd")))
     )
@@ -1942,7 +1942,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = pp.agg(
         F.max("s").cast("long").alias("s"), F.max("dd").cast("long").alias("dd")
     )
-    r_root = root.crossJoin(F.broadcast(tot)).select(
+    r_root = root.crossJoin(tot).select(
         F.lit(1).cast("long").alias("split_level"),
         F.col("k1").alias("cp_index"),
         F.col("dd").alias("n_seg"),
@@ -2027,9 +2027,9 @@ GROUP BY event_type
 )
 def ts_alert_hysteresis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hysteresis (Schmitt-trigger) alerting over the hourly rate per
-    event type: the alert OPENS when an hour exceeds {_HYST_HI}× the
+    event type: the alert OPENS when an hour exceeds 1.3× the
     type's mean hourly rate and only CLOSES when it falls below
-    {_HYST_LO}× — the two-threshold discipline every production
+    0.8× — the two-threshold discipline every production
     monitor uses to stop flapping at a single threshold (plain
     thresholding is `stats_mad_outliers`'s job; this is its stateful
     ops-grade sibling). The sequential state is expressed as
@@ -2204,7 +2204,7 @@ def ts_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
             step,
         ).alias("st"),
     )
-    return fin.crossJoin(F.broadcast(tot_hours)).select(
+    return fin.crossJoin(tot_hours).select(
         "n_nonzero",
         "n_hours",
         (F.floor(F.col("st.z") * 1_000_000.0) / 1_000_000.0).alias(
@@ -2273,7 +2273,7 @@ WHERE n1 * s11 > s1 * s1
     tags=("timeseries", "stats"),
 )
 def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lo-MacKinlay variance-ratio test (q={_VR_Q}) per event type over
+    """Lo-MacKinlay variance-ratio test (q=4) per event type over
     the dense hourly count series: VR = Var(q-hour change)/(q·Var(1-hour
     change)) — 1 for a random walk, < 1 under mean reversion, > 1 under
     trending/momentum; the standard "is this series a random walk or
@@ -2297,7 +2297,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("hour")
     )
-    grid = ev.select("event_type").distinct().crossJoin(F.broadcast(spine))
+    grid = ev.select("event_type").distinct().crossJoin(spine)
     series = grid.join(agg, ["event_type", "hour"], "left").select(
         "event_type", "hour", F.coalesce("n", F.lit(0)).cast("long").alias("x")
     )
@@ -2403,7 +2403,7 @@ def ts_peak_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("hour")
     )
-    grid = ev.select("event_type").distinct().crossJoin(F.broadcast(spine))
+    grid = ev.select("event_type").distinct().crossJoin(spine)
     series = (
         grid.join(agg, ["event_type", "hour"], "left")
         .select(

@@ -70,10 +70,10 @@ def join_volume_shipping_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1e6).cast("long")
     return (
         li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
+        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("long").alias("l_year"))
         .agg(
@@ -118,7 +118,7 @@ def agg_top_supplier_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = rev.agg(F.max("rev_micros").alias("max_micros"))
     s = load_table(spark, sf_dir, "supplier")
     return (
-        rev.join(F.broadcast(top), F.col("rev_micros") == F.col("max_micros"))
+        rev.join(top, F.col("rev_micros") == F.col("max_micros"))
         .join(s, F.col("supplier_no") == F.col("s_suppkey"))
         .select(
             "s_suppkey",
@@ -275,7 +275,7 @@ def join_global_sales_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
     )
     return (
-        c.crossJoin(F.broadcast(pos))
+        c.crossJoin(pos)
         .filter(bal_cents * F.col("n") > F.col("cents"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy("c_mktsegment")

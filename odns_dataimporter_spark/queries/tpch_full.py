@@ -83,8 +83,8 @@ def join_min_cost_supplier_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     eu = (
         load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(r, F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
     eu_cat = catalog.join(F.broadcast(eu), catalog.suppkey == eu.s_suppkey)
@@ -190,7 +190,7 @@ def join_product_profit_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -320,7 +320,7 @@ def join_promo_suppliers_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 3)
     return (
         load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
         .join(qualified, F.col("s_suppkey") == qualified.l_suppkey, "left_semi")
         .select("s_name", "s_acctbal")
     )

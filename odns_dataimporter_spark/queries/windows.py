@@ -306,7 +306,7 @@ def window_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")
         .agg(
             money_sum(

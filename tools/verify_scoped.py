@@ -9,6 +9,7 @@ Usage: python tools/verify_scoped.py q1 q2 ...   (no names = entry only)
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -21,7 +22,7 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
 
     print("RESULT entry rows:", e.entry(spark).count(), flush=True)
